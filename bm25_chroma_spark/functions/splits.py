@@ -183,15 +183,31 @@ def stratified_sample_df(
     _bound_fn.__annotations__ = {"rate": pd.Series, "return": pd.Series}
     _bound = pandas_udf(T.StringType())(_bound_fn)
 
-    # dropDuplicates on the group column: duplicate group rows in a
-    # user-supplied rate table would otherwise fan the left join out
-    # and silently DUPLICATE corpus rows (ADVICE r8). Mirrors
-    # filter_blocked_domains' blocklist dedup.
+    # one row per group: duplicate group rows in a user-supplied rate
+    # table would otherwise fan the left join out and silently
+    # DUPLICATE corpus rows (ADVICE r8). Duplicates that agree
+    # collapse; duplicates whose rates CONFLICT fail the query (a
+    # plain dedup would keep an arbitrary one of them).
+    per_group = rates_df.select(
+        F.col(group_col).alias("__ss_grp"),
+        F.col("rate").cast("double").alias("__ss_rate"),
+    ).groupBy("__ss_grp").agg(
+        F.min("__ss_rate").alias("__ss_lo"),
+        F.max("__ss_rate").alias("__ss_hi"),
+    )
+    conflict = F.raise_error(
+        F.concat(
+            F.lit("stratified_sample_df: conflicting rates for group "),
+            F.col("__ss_grp").cast("string"),
+        )
+    )
     bounds = F.broadcast(
-        rates_df.select(
-            F.col(group_col).alias("__ss_grp"),
-            _bound(F.col("rate").cast("double")).alias("__ss_bound"),
-        ).dropDuplicates(["__ss_grp"])
+        per_group.select(
+            "__ss_grp",
+            F.when(F.col("__ss_lo") != F.col("__ss_hi"), conflict)
+            .otherwise(_bound(F.col("__ss_lo")))
+            .alias("__ss_bound"),
+        )
     )
     h = _digest(F.col(id_col), salt)
     joined = df.join(bounds, df[group_col] == bounds["__ss_grp"], "left")

@@ -938,16 +938,19 @@ class ShardedIndex:
     # in-memory dict. The classic search-engine answer is a bounded
     # hot-term cache: keep the COMPRESSED posting rows of recently
     # queried terms on the driver and run the exact Block-Max WAND
-    # DAAT loop locally (index/wand.py _run_local) — identical
+    # DAAT loop locally (index/wand.py _run_local_daat) — identical
     # results (WAND is rank-safe exact, and the local path shares the
-    # cursors/heap verbatim), zero Spark jobs when warm. A term whose
-    # rows exceed the whole budget is fetched and served ONCE, then
-    # cached as a too-big marker that postings_cacheable() reads to
-    # keep it off the driver path while the generation holds (the
-    # per-query est_work gate in search_sharded bounds what can reach
-    # here in the first place); the budget bounds resident driver
-    # memory, LRU keeps it hot, and every entry carries the index
-    # generation so DML can never be served stale rows.
+    # cursors/heap verbatim), zero Spark jobs when warm, and zero on a
+    # miss too while the driver-side reader (index/reader.py) can
+    # serve it: postings_cache_bytes also bounds the column chunks
+    # the reader may decode, above which a miss is one Spark collect.
+    # A term whose rows exceed the whole budget is fetched and served
+    # ONCE, then cached as a too-big marker that postings_cacheable()
+    # reads to keep it off the driver path while the generation holds
+    # (the per-query est_work gate in search_sharded bounds what can
+    # reach here in the first place); the budget bounds resident
+    # driver memory, LRU keeps it hot, and every entry carries the
+    # index generation so DML can never be served stale rows.
     postings_cache_bytes: int = 256 << 20
 
     def postings_cacheable(self, terms: List[str]) -> bool:
@@ -972,11 +975,16 @@ class ShardedIndex:
     def postings_rows(self, terms: List[str]) -> Dict[str, list]:
         """Driver-side posting rows per term (one row per live
         (term, segment) after the DML overlay), served from the LRU
-        cache when the entry's generation matches, fetched with ONE
-        bucket-pruned collect otherwise. Unknown terms cache as empty
-        lists so they never re-trigger a job. A term whose rows exceed
-        the whole budget is served but cached as a too-big marker
-        (rows=None) so postings_cacheable() can route it distributed."""
+        cache when the entry's generation matches. Misses are read by
+        the driver-side parquet reader (index/reader.py: same files,
+        pruning and overlay, zero Spark jobs) when their column chunks
+        fit postings_cache_bytes, and by ONE bucket-pruned Spark
+        collect above that. Unknown terms cache as empty lists so they
+        never re-trigger a read. A term whose rows exceed the whole
+        budget is served but cached as a too-big marker (rows=None) so
+        postings_cacheable() can route it distributed."""
+        from bm25_chroma_spark.index.reader import shard_rows
+
         gen = self.generation
         cache = self._postings_cache
         # run eviction on EVERY call, not only inside the miss branch:
@@ -993,8 +1001,14 @@ class ShardedIndex:
             else:
                 missing.append(t)
         if missing:
+            read = shard_rows(self, missing)
+            if read is None:
+                read = [
+                    r.asDict(recursive=True)
+                    for r in self.shards_for_terms(missing).collect()
+                ]
             fetched: Dict[str, list] = {t: [] for t in missing}
-            for r in self.shards_for_terms(missing).collect():
+            for r in read:
                 fetched[r["term"]].append(
                     _CachedShardRow(
                         term=r["term"],
@@ -1003,7 +1017,7 @@ class ShardedIndex:
                         doc_bytes=bytes(r["doc_bytes"]),
                         tf_bytes=bytes(r["tf_bytes"]),
                         dl_bytes=bytes(r["dl_bytes"]),
-                        blocks=tuple(b.asDict() for b in r["blocks"]),
+                        blocks=tuple(r["blocks"]),
                     )
                 )
             for t, rows in fetched.items():
@@ -1035,12 +1049,13 @@ class ShardedIndex:
     # repeat query pays the full distributed floor. save_hot_set
     # persists the LRU's TERM LIST (names only — never posting bytes,
     # so the file is a few KB and carries no stale data risk);
-    # prewarm on a fresh handle refills the LRU and the df cache with
-    # ONE bucket-pruned collect. Staleness semantics are unchanged by
-    # construction: the hot set is a HINT — prewarm fetches rows from
-    # the live generation overlay through postings_rows, whose
-    # entries stay generation-tagged, so a hot set saved before a DML
-    # can never surface pre-DML rows.
+    # prewarm on a fresh handle refills the LRU and the df cache
+    # through postings_rows (driver-side reads below its byte bound).
+    # Staleness semantics are unchanged by construction: the hot set
+    # is a HINT — prewarm fetches rows from the live generation
+    # overlay through postings_rows, whose entries stay
+    # generation-tagged, so a hot set saved before a DML can never
+    # surface pre-DML rows.
 
     def save_hot_set(self, max_terms: int = 4096) -> int:
         """Write the current-generation cached terms (MRU tail, at
@@ -1062,8 +1077,8 @@ class ShardedIndex:
     def prewarm(self, terms: Optional[List[str]] = None,
                 max_terms: int = 4096) -> int:
         """Fill the postings LRU and the per-term df cache for
-        ``terms`` (default: the persisted hot set) via bucket-pruned
-        collects, so a reloaded interactive handle serves its first
+        ``terms`` (default: the persisted hot set) via postings_rows,
+        so a reloaded interactive handle serves its first
         repeat query without the scan+decode pipeline. Returns the
         number of terms warmed (0 when no hot set exists).
 
@@ -1073,10 +1088,10 @@ class ShardedIndex:
         approaching the budget — continuing past that point would
         only churn out the terms just warmed (popitem from the LRU
         head) while materializing more posting bytes on the driver.
-        The chunking also bounds the per-collect transient (the
+        The chunking also bounds the per-read transient (the
         per-query est_work gate that protects postings_rows' normal
         callers does not apply here). A typical interactive hot set
-        is a few dozen terms = one collect. Returns the number of
+        is a few dozen terms = one read. Returns the number of
         current-generation term entries actually RESIDENT with rows
         after warming — not the number requested."""
         import json

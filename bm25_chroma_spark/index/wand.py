@@ -623,10 +623,13 @@ def _auto_strategy(
 
 
 # A query whose terms sum to at most this many postings is eligible
-# for the driver-local cached path: the full Block-Max WAND DAAT over
-# 200k decoded postings runs well under the ~1.2-2.0 s Spark job
-# floor it replaces, and the bound keeps genuinely hot terms (1M-doc
-# hota/hotb/hotc in bench wand_1m) on the distributed engines.
+# for the driver-local path: the full Block-Max WAND DAAT over 200k
+# decoded postings runs well under the ~1.2-2.0 s Spark job floor it
+# replaces, and the bound keeps genuinely hot terms (1M-doc
+# hota/hotb/hotc in bench wand_1m) on the distributed engines. Below
+# it the posting rows come from the postings LRU or, on a miss, from
+# the driver-side parquet reader (index/reader.py) — zero Spark jobs
+# either way while the rows fit postings_cache_bytes.
 CACHE_MAX_QUERY_POSTINGS = 200_000
 
 
@@ -649,8 +652,29 @@ def _empty_results_df(spark) -> DataFrame:
     ).limit(0)
 
 
+def _rows_df(spark, rows: List[tuple]) -> DataFrame:
+    """(query_id, doc_id, score, rank) tuples as an Arrow-backed local
+    relation: a plain-list createDataFrame pays a ~0.28s pickling
+    collect path PER CALL (measured r6), the pandas/Arrow one ~15ms.
+    EMPTY results go through _empty_results_df: an empty pandas frame
+    plans as Scan ExistingRDD, whose collect() launches a job."""
+    if not rows:
+        return _empty_results_df(spark)
+    qids, dids, scores, ranks = zip(*rows)
+    pdf = pd.DataFrame(
+        {
+            "query_id": pd.Series(qids, dtype="int64"),
+            "doc_id": pd.Series(dids, dtype="int64"),
+            "score": pd.Series(scores, dtype="float64"),
+            "rank": pd.Series(ranks, dtype="int32"),
+        }
+    )
+    return spark.createDataFrame(
+        pdf, schema="query_id long, doc_id long, score double, rank int"
+    )
+
+
 def _run_local_daat(
-    spark,
     index: ShardedIndex,
     qt_data: List[tuple],
     df_map: dict,
@@ -659,14 +683,16 @@ def _run_local_daat(
     cfg,
     top_k: int,
     score_round: Optional[int],
-) -> DataFrame:
-    """Driver-local twin of search_sharded's WAND engine over cached
-    posting rows: same _Cursor/_bmw_topk machinery, same per-segment
-    top-k union, same (score desc, doc_id asc) global rank — the only
-    physical difference is that the rows come from
-    ShardedIndex.postings_rows (bounded generation-tagged LRU) and the
-    heap runs in the driver, so a warm call launches no Spark job at
-    all. Only reached when the query's total df fits
+) -> List[tuple]:
+    """Driver-local twin of search_sharded's WAND engine: same
+    _Cursor/_bmw_topk machinery, same per-segment top-k union, same
+    (score desc, doc_id asc) global rank — the only physical
+    difference is that the rows come from ShardedIndex.postings_rows
+    (the bounded generation-tagged LRU, filled on a miss by the
+    driver-side parquet reader) and the heap runs in the driver, so
+    the call launches no Spark job. Returns (query_id, doc_id, score,
+    rank) tuples; search_sharded wraps them for DataFrame callers.
+    Only reached when the query's total df fits
     CACHE_MAX_QUERY_POSTINGS."""
     from collections import defaultdict
 
@@ -677,34 +703,8 @@ def _run_local_daat(
             continue
         idf = math.log((n - df_t + 0.5) / (df_t + 0.5) + 1.0)
         by_qid[qid].append((term, idf * float(qtf)))
-    schema = "query_id long, doc_id long, score double, rank int"
-
-    def _result_df(rows: List[tuple]) -> DataFrame:
-        # Arrow-backed local relation: a plain-list createDataFrame
-        # pays a ~0.28s pickling collect path PER CALL (measured r6),
-        # the pandas/Arrow one ~15ms — this is most of the warm-path
-        # floor. EMPTY results must not go through an empty frame:
-        # both an empty pandas frame and an empty-list createDataFrame
-        # plan as Scan ExistingRDD, whose collect() launches a
-        # (pointless) Spark job — a one-row Arrow frame with limit(0)
-        # plans as LocalTableScan <empty>, zero jobs (measured:
-        # 1 job/0.32s vs 0 jobs/ms for a no-match query).
-        if not rows:
-            return _empty_results_df(spark)
-        pdf = pd.DataFrame(
-            {
-                "query_id": pd.Series(
-                    [r[0] for r in rows], dtype="int64"
-                ),
-                "doc_id": pd.Series([r[1] for r in rows], dtype="int64"),
-                "score": pd.Series([r[2] for r in rows], dtype="float64"),
-                "rank": pd.Series([r[3] for r in rows], dtype="int32"),
-            }
-        )
-        return spark.createDataFrame(pdf, schema=schema)
-
     if not by_qid:
-        return _result_df([])
+        return []
     terms = sorted({t for tw in by_qid.values() for t, _ in tw})
     rows_map = index.postings_rows(terms)
     seg_rows: dict = {}
@@ -734,7 +734,7 @@ def _run_local_daat(
         cand.sort(key=lambda ds: (-ds[1], ds[0]))
         for rank, (d, s) in enumerate(cand[:top_k], 1):
             out_rows.append((qid, int(d), float(s), rank))
-    return _result_df(out_rows)
+    return out_rows
 
 
 def search_sharded(
@@ -754,18 +754,52 @@ def search_sharded(
     of (query_id, query_text) pairs — the list form skips a
     collect() roundtrip for interactive callers.
 
+    Every strategy reads the per-term dfs driver-side through the
+    parquet reader (index/reader.py: the (term, segment, df) columns
+    of the pruned shard files, same overlay as the Spark scan), and
+    through a pruned Spark collect only when those column chunks
+    exceed postings_cache_bytes.
+
     ``use_cache`` (default: on for strategy='auto', off for the
     explicit engines so their benchmarks stay pure) lets interactive
     queries whose terms total at most CACHE_MAX_QUERY_POSTINGS
     postings run the exact BMW DAAT loop driver-side against
     ShardedIndex.postings_rows — the bounded, generation-tagged LRU
-    of compressed posting rows. Warm calls launch ZERO Spark jobs;
-    cold calls pay one bucket-pruned collect instead of the
-    scan+decode+2-shuffle+window pipeline. Results are identical to
+    of compressed posting rows, whose misses the same reader fills.
+    Such a call launches ZERO Spark jobs, warm or cold, as long as
+    the rows fit postings_cache_bytes; the only DataFrame it builds
+    is this function's Arrow-backed wrapper of its result rows
+    (search_sharded_rows skips even that). Results are identical to
     the distributed engines (same cursors, same heap, same
     round-before-rank) up to float summation order vs 'exhaustive',
     which the engine-equality contract already treats as equal
     (rank identity + rel_tol, like wand-vs-exhaustive)."""
+    res = _search(index, queries, top_k, strategy, score_round, use_cache)
+    return res if isinstance(res, DataFrame) else _rows_df(index.spark, res)
+
+
+def search_sharded_rows(
+    index: ShardedIndex,
+    queries,
+    top_k: int = 50,
+    strategy: str = "exhaustive",
+    score_round: Optional[int] = None,
+    use_cache: Optional[bool] = None,
+) -> List[tuple]:
+    """search_sharded's result as (query_id, doc_id, score, rank)
+    tuples, for driver-side callers (the facade's BM25 leg): the
+    driver-local path's rows come back as they are — no
+    createDataFrame + collect round trip — and a distributed plan is
+    collected."""
+    res = _search(index, queries, top_k, strategy, score_round, use_cache)
+    if isinstance(res, DataFrame):
+        return [tuple(r) for r in res.collect()]
+    return res
+
+
+def _search(index, queries, top_k, strategy, score_round, use_cache):
+    """search_sharded's body: a list of row tuples when the driver-local
+    path served the call, else the distributed plan's DataFrame."""
     cfg = index.config
     # queries are tiny by contract: get the raw texts driver-side and
     # tokenize with the same reference-parity function — avoids a
@@ -773,6 +807,7 @@ def search_sharded(
     from collections import Counter
 
     from bm25_chroma_spark.functions.tokenizer import tokenize_py
+    from bm25_chroma_spark.index.reader import shard_rows
 
     if isinstance(queries, DataFrame):
         spark = queries.sparkSession
@@ -793,12 +828,12 @@ def search_sharded(
     ]
     terms = sorted({t for _, t, _ in qt_data})
     if not terms:
-        return _empty_results_df(spark)
+        return []
     n, avgdl = float(index.n_docs), float(index.avgdl)
 
     # scan-plan construction is deferred: building the bucket-pruned
     # overlay costs a gen-dir glob + plan assembly on the driver,
-    # which the fully-warm cached path never needs
+    # which the driver-local path never needs
     _memo: dict = {}
 
     def get_shards() -> DataFrame:
@@ -806,29 +841,15 @@ def search_sharded(
             _memo["shards"] = index.shards_for_terms(terms)
         return _memo["shards"]
 
-    def collect_term_dfs() -> List[dict]:
-        """Per-term global df (sum over segments), summed DRIVER-side
-        from the raw (term, df) shard rows: at most n_segments rows
-        per term, and skipping the groupBy turns the df job into a
-        one-stage pruned scan + collect instead of a two-stage agg
-        with its own Exchange (r9, guide §2.4)."""
-        from collections import Counter
-
-        acc: Counter = Counter()
-        for r in get_shards().select("term", "df").collect():
-            acc[r["term"]] += int(r["df"])
-        return [{"term": t, "df": d} for t, d in sorted(acc.items())]
-
-    # Per-term global df (sum over segments). Two execution shapes:
-    # Per-term global df is ALWAYS collected driver-side (bounded by
-    # the query's term count — queries are tiny by contract): every
-    # engine needs it (cap guard, auto vote, WAND weights, exhaustive
-    # scoring), and keeping it as a plan subtree (the pre-r9 shape for
-    # explicit strategies) forced the exhaustive path to scan the
-    # shards a SECOND time under a 2-stage agg + BroadcastExchange on
-    # every call — one flagship query carried 10 Exchange nodes /
-    # 6 jobs; folding df into the single driver-built query-spec
-    # broadcast removes that whole subtree (r9, guide §2.4/§3.1).
+    # Per-term global df (sum over segments) is ALWAYS computed
+    # driver-side (bounded by the query's term count — queries are
+    # tiny by contract): every engine needs it (cap guard, auto vote,
+    # WAND weights, exhaustive scoring), and keeping it as a plan
+    # subtree (the pre-r9 shape) scanned the shards a SECOND time
+    # under a 2-stage agg + BroadcastExchange on every call. The
+    # per-segment dfs come from the reader's (term, segment, df)
+    # columns — no Spark job — and from a pruned Spark collect only
+    # above the reader's byte bound.
     # caps that must refuse when binding: the query cap always (its
     # tf-ordered traversal is logical-path-only); the BUILD cap only
     # on LEGACY indexes built before physical cap enforcement (their
@@ -842,26 +863,22 @@ def search_sharded(
         guard_caps.append(cfg.max_postings_per_term)
     if use_cache is None:
         use_cache = strategy == "auto"
-    # per-index df cache (cleared on refresh): the driver-side df
-    # agg is a full bucket-pruned scan job; interactive workloads
-    # repeat the same hot terms every query, so pay it once per
-    # (index state, term) instead of once per call. Unknown terms
-    # are cached as 0 so they don't force a job either.
-    cache = getattr(index, "_df_cache", None)
-    if cache is None:
-        cache = index._df_cache = {}
-    if all(t in cache for t in terms):
-        df_rows = [
-            {"term": t, "df": cache[t]} for t in terms if cache[t] > 0
-        ]
-    else:
-        df_rows = collect_term_dfs()
-        seen = {r["term"] for r in df_rows}
-        for r in df_rows:
-            cache[r["term"]] = int(r["df"])
-        for t in terms:
-            if t not in seen:
-                cache[t] = 0
+    # per-index df cache (cleared on refresh): interactive workloads
+    # repeat the same hot terms every query, so read each term's df
+    # once per index state. Unknown terms cache as 0.
+    cache = index._df_cache
+    missing = [t for t in terms if t not in cache]
+    if missing:
+        seg_dfs = shard_rows(index, missing, ("term", "segment", "df"))
+        if seg_dfs is None:
+            seg_dfs = index.shards_for_terms(missing).select(
+                "term", "df"
+            ).collect()
+        acc: Counter = Counter({t: 0 for t in missing})
+        for r in seg_dfs:
+            acc[r["term"]] += int(r["df"])
+        cache.update(acc)
+    df_rows = [{"term": t, "df": cache[t]} for t in terms if cache[t] > 0]
     if guard_caps:
         limit = min(guard_caps)
         hot = sorted(
@@ -892,7 +909,7 @@ def search_sharded(
             terms
         ):
             return _run_local_daat(
-                spark, index, qt_data, df_map, n, avgdl, cfg,
+                index, qt_data, df_map, n, avgdl, cfg,
                 top_k, score_round,
             )
 

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from typing import Optional
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -268,6 +269,17 @@ def ngram_jaccard_pairs(
 # SimHash                                                             #
 # ------------------------------------------------------------------ #
 
+def _hash_bit_rows(h: np.ndarray) -> np.ndarray:
+    """(64, n) int32 matrix whose row j holds bit j of each uint64
+    hash. The byte view goes through an explicit little-endian dtype:
+    a native view on a big-endian host would put bit 56 where bit 0
+    belongs and silently change every signature."""
+    le = h.astype("<u8", copy=False).view(np.uint8).reshape(len(h), 8)
+    return np.unpackbits(
+        np.ascontiguousarray(le.T), axis=0, bitorder="little"
+    ).astype(np.int32)
+
+
 def make_simhash64_udf(token_hash: str = "blake2b"):
     """64-bit SimHash pandas UDF over whitespace tokens.
 
@@ -283,8 +295,6 @@ def make_simhash64_udf(token_hash: str = "blake2b"):
       signatures bit-for-bit.
     """
     import hashlib as _h
-
-    import numpy as np
 
     if token_hash == "blake2b":
         def tok_hash(tok: str) -> int:
@@ -331,10 +341,7 @@ def make_simhash64_udf(token_hash: str = "blake2b"):
         # the shift entirely (0.04 s). Votes are integer sums either
         # way — signatures are bit-identical (parity test + the
         # simhash_dups oracle pin it).
-        hb = np.ascontiguousarray(h.view(np.uint8).reshape(len(h), 8).T)
-        bits_t = np.unpackbits(hb, axis=0, bitorder="little").astype(
-            np.int32
-        )  # (64, n_tokens): row j = bit j of each token hash
+        bits_t = _hash_bit_rows(h)
         offsets = np.zeros(len(texts), dtype=np.int64)
         np.cumsum(counts[:-1], out=offsets[1:])
         # reduceat only over NON-EMPTY docs' offsets, scattered back:

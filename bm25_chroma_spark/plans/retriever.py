@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 from bm25_chroma_spark.config import BM25Config
 from bm25_chroma_spark.index.dml import apply_dml
 from bm25_chroma_spark.index.shards import ShardedIndex, build_sharded_index
-from bm25_chroma_spark.index.wand import search_sharded
+from bm25_chroma_spark.index.wand import search_sharded, search_sharded_rows
 from bm25_chroma_spark.operators.fusion import rrf_fuse_py
 
 
@@ -160,7 +160,8 @@ class _VecCache:
     order as the JVM ``F.aggregate`` so cosine distances are
     bit-identical to operators/knn.py::knn_bruteforce."""
 
-    __slots__ = ("uids", "vec_ids", "mat", "doc_norms", "by_uid")
+    __slots__ = ("uids", "vec_ids", "mat", "doc_norms", "by_uid",
+                 "_id_order")
 
     def __init__(self, uids, vec_ids, mat):
         self.uids = uids
@@ -173,6 +174,24 @@ class _VecCache:
             acc = acc + v * v
         self.doc_norms = np.sqrt(acc)
         self.by_uid = {u: i for i, u in enumerate(uids)}
+        self._id_order = None
+
+    def uids_of(self, ids: List[int]) -> Dict[int, str]:
+        """doc_id -> doc_uid for the ids this matrix holds. vec_ids
+        are the doc_id_expr ids the index stores, so every live uid
+        with a vector resolves here without a corpus read; the sorted
+        view (argsort, 8 bytes per row) is built on first use."""
+        if not len(self.vec_ids) or not ids:
+            return {}
+        if self._id_order is None:
+            self._id_order = np.argsort(self.vec_ids, kind="stable")
+        srt = self.vec_ids[self._id_order]
+        q = np.asarray(ids, dtype=np.int64)
+        pos = np.minimum(np.searchsorted(srt, q), len(srt) - 1)
+        hit = np.flatnonzero(srt[pos] == q)
+        return {
+            int(q[i]): self.uids[int(self._id_order[pos[i]])] for i in hit
+        }
 
     def topk(self, qvec, k: int):
         """Exact twin of knn_bruteforce's scoring + ordering: dot and
@@ -253,8 +272,8 @@ class SparkHybridRetriever:
         bm25_strategy: strategy passed to search_sharded by the BM25
         leg — 'auto' (default) routes each query per its df profile
         through exhaustive or Block-Max WAND (index/wand.py
-        _wand_vote_qids; the per-index df cache makes the vote one
-        cached collect), matching whichever engine measures faster
+        _wand_vote_qids; the vote reads per-term dfs driver-side,
+        cached per index state), matching whichever engine measures faster
         for that query's term statistics. Both engines are exact, so
         results are identical; set 'exhaustive' or 'wand' to pin one.
 
@@ -786,28 +805,15 @@ class SparkHybridRetriever:
                 "that does not exist (hybrid_retriever.py:247); the "
                 "default path already applies the Solr norm"
             )
-        if self._index is None:
-            return []
-        # top-k rows are tiny by contract: collect them first (a
-        # LocalTableScan when the postings LRU served the query) and
-        # resolve uids through the warm LRU — a warm repeat never
-        # rescans the corpus-sized uid map
-        rows = search_sharded(
-            self._index, [(0, query)], top_k=top_k,
-            strategy=self.bm25_strategy,
-        ).collect()
-        uid_of = self._uids_for_doc_ids([r["doc_id"] for r in rows])
-        return [
-            (uid_of[r["doc_id"]], r["score"])
-            for r in sorted(rows, key=lambda r: r["rank"])
-            if r["doc_id"] in uid_of
-        ]
+        self._warm_caches()
+        return self._bm25_lists([query], top_k)[0]
 
     def search_vector(self, query: str, top_k: int = 50
                       ) -> List[Tuple[str, float]]:
         """Vector leg; sim = 1/(1+dist) (reference
         hybrid_retriever.py:266). Exact KNN below ``ann_threshold``
         (reference-deterministic), IVF ANN above (see _vector_lists)."""
+        self._warm_caches()
         return self._vector_lists([query], top_k)[0]
 
     def hybrid_search(
@@ -820,8 +826,9 @@ class SparkHybridRetriever:
     ) -> List[Tuple[str, float, Dict]]:
         """Both legs at top-50 -> RRF (ratio honored here) -> enriched
         triples (reference hybrid_retriever.py:275-310)."""
-        bm25_results = self.search_bm25(query, top_k=50)
-        vector_results = self.search_vector(query, top_k=50)
+        self._warm_caches()
+        vector_results = self._vector_lists([query], 50)[0]
+        bm25_results = self._bm25_lists([query], 50)[0]
         if not bm25_results and not vector_results:
             return []
         if use_rrf and bm25_results and vector_results:
@@ -890,7 +897,10 @@ class SparkHybridRetriever:
     def _warm_caches(self) -> None:
         """Validate the warm caches against the current corpus state,
         clearing them all when the key moved (DML can never be served
-        stale driver-side rows)."""
+        stale driver-side rows). Each public read entry (query,
+        search_bm25, search_vector, hybrid_search, prewarm) calls it
+        ONCE, before any cache is read; the helpers below never do, so
+        no cache is cleared while a call is still iterating it."""
         key = self._interactive_key()
         if key != self._warm_key:
             self._warm_key = key
@@ -906,7 +916,6 @@ class SparkHybridRetriever:
         exact path — at 100 TB the cache simply refuses. vec_ids ship
         as strings (Arrow nullable-long float64 rounding, see
         _VecCache docstring)."""
-        self._warm_caches()
         if self._vec_cache == "too-big":
             return None
         if self._vec_cache is not None:
@@ -941,12 +950,14 @@ class SparkHybridRetriever:
         )
 
     def _uids_for_doc_ids(self, doc_ids: List[int]) -> Dict[int, str]:
-        """doc_id (xxhash64) -> doc_uid through the bounded warm LRU;
-        misses fetched with ONE filtered projection of the corpus
-        (isin pushes into the parquet scan for interactive-sized
-        lists; a broadcast-joined ids DataFrame above that — never a
-        giant literal expression tree)."""
-        self._warm_caches()
+        """doc_id (doc_id_expr hash) -> doc_uid through the bounded warm
+        LRU. Misses resolve from the loaded vector cache (it holds
+        every live uid with a vector, keyed by the same id) with no
+        read at all; only ids it lacks — BM25-only docs, or no cache
+        loaded — are fetched with ONE filtered projection of the
+        corpus (isin pushes into the parquet scan for
+        interactive-sized lists; a broadcast-joined ids DataFrame
+        above that — never a giant literal expression tree)."""
         out: Dict[int, str] = {}
         missing: List[int] = []
         for d in doc_ids:
@@ -958,20 +969,28 @@ class SparkHybridRetriever:
                 missing.append(d)
         if missing:
             missing = sorted(set(missing))
-            if len(missing) <= 1024:
-                fetched = self._uid_map().filter(
-                    F.col("doc_id").isin([int(x) for x in missing])
+            found: Dict[int, str] = {}
+            if isinstance(self._vec_cache, _VecCache):
+                found = self._vec_cache.uids_of(missing)
+                missing = [d for d in missing if d not in found]
+            if missing:
+                if len(missing) <= 1024:
+                    fetched = self._uid_map().filter(
+                        F.col("doc_id").isin([int(x) for x in missing])
+                    )
+                else:
+                    ids_df = self.spark.createDataFrame(
+                        [(int(x),) for x in missing], "doc_id long"
+                    )
+                    fetched = self._uid_map().join(
+                        F.broadcast(ids_df), "doc_id"
+                    )
+                found.update(
+                    (r["doc_id"], r["doc_uid"]) for r in fetched.collect()
                 )
-            else:
-                ids_df = self.spark.createDataFrame(
-                    [(int(x),) for x in missing], "doc_id long"
-                )
-                fetched = self._uid_map().join(
-                    F.broadcast(ids_df), "doc_id"
-                )
-            for r in fetched.collect():
-                out[r["doc_id"]] = r["doc_uid"]
-                self._uid_cache[r["doc_id"]] = r["doc_uid"]
+            for d, u in found.items():
+                out[d] = u
+                self._uid_cache[d] = u
             while len(self._uid_cache) > self.uid_cache_max_entries:
                 self._uid_cache.popitem(last=False)
         return out
@@ -980,11 +999,16 @@ class SparkHybridRetriever:
         self, uids: List[str]
     ) -> Tuple[Dict[str, str], Dict[str, Dict]]:
         """(texts, metas) for result uids through the bounded warm doc
-        LRU: a warm repeat skips the corpus scan entirely; misses are
-        fetched in one filtered projection and cached."""
+        LRU: a warm repeat skips the corpus entirely. Up to 1024
+        misses are read driver-side by the parquet reader
+        (index/reader.py: the corpus_df overlay, zero Spark jobs)
+        while their column chunks fit the index's postings_cache_bytes;
+        above either bound they are fetched by a Spark projection.
+        Fetched rows are cached."""
         import json as _json
 
-        self._warm_caches()
+        from bm25_chroma_spark.index.reader import corpus_rows
+
         texts: Dict[str, str] = {}
         metas: Dict[str, Dict] = {}
         missing: List[str] = []
@@ -998,26 +1022,39 @@ class SparkHybridRetriever:
             else:
                 missing.append(u)
         if missing:
-            # interactive-sized sets push isin into the parquet scan;
-            # above that a broadcast-joined ids DataFrame (a 1k-query
-            # batched query() can carry 50k result uids — a giant isin
-            # literal tree is the r4 anti-pattern, never build one)
+            got = None
             if len(missing) <= 1024:
-                fetched = self.corpus_df().filter(
-                    F.col("doc_uid").isin(missing)
+                budget = (
+                    self._index.postings_cache_bytes
+                    if self._index is not None
+                    else ShardedIndex.postings_cache_bytes
                 )
-            else:
-                ids_df = self.spark.createDataFrame(
-                    [(u,) for u in missing], "doc_uid string"
-                )
-                fetched = self.corpus_df().join(
-                    F.broadcast(ids_df), "doc_uid"
-                )
-            for r in fetched.collect():
-                texts[r["doc_uid"]] = r["text"]
-                if r["meta_json"]:
-                    metas[r["doc_uid"]] = _json.loads(r["meta_json"])
-                self._doc_cache[r["doc_uid"]] = (r["text"], r["meta_json"])
+                got = corpus_rows(self.state / "corpus", missing, budget)
+            if got is None:
+                # interactive-sized sets push isin into the parquet
+                # scan; above that a broadcast-joined ids DataFrame (a
+                # 1k-query batched query() can carry 50k result uids —
+                # a giant isin literal tree is the r4 anti-pattern)
+                if len(missing) <= 1024:
+                    fetched = self.corpus_df().filter(
+                        F.col("doc_uid").isin(missing)
+                    )
+                else:
+                    ids_df = self.spark.createDataFrame(
+                        [(u,) for u in missing], "doc_uid string"
+                    )
+                    fetched = self.corpus_df().join(
+                        F.broadcast(ids_df), "doc_uid"
+                    )
+                got = {
+                    r["doc_uid"]: (r["text"], r["meta_json"])
+                    for r in fetched.collect()
+                }
+            for u, (text, meta_json) in got.items():
+                texts[u] = text
+                if meta_json:
+                    metas[u] = _json.loads(meta_json)
+                self._doc_cache[u] = (text, meta_json)
             while len(self._doc_cache) > self.doc_cache_max_entries:
                 self._doc_cache.popitem(last=False)
         return texts, metas
@@ -1025,24 +1062,23 @@ class SparkHybridRetriever:
     def _bm25_lists(
         self, query_texts: List[str], top_k: int
     ) -> List[List[Tuple[str, float]]]:
-        """BM25 leg for ALL queries in one search_sharded call. The
-        top-k rows are collected first (a LocalTableScan when the
-        postings LRU served the whole batch — zero jobs) and uids
-        resolve through the warm LRU, so a warm repeat never touches
-        the corpus-sized uid map."""
+        """BM25 leg for ALL queries in one search_sharded_rows call:
+        the driver-local path hands back its rows as a Python list
+        (zero Spark jobs while the postings fit the reader's bounds)
+        and uids resolve through the warm LRU and the vector cache, so
+        an interactive query never touches the corpus-sized uid
+        map."""
         out: List[List[Tuple[str, float]]] = [[] for _ in query_texts]
         if self._index is None:
             return out
-        rows = search_sharded(
+        rows = search_sharded_rows(
             self._index, list(enumerate(query_texts)), top_k=top_k,
             strategy=self.bm25_strategy,
-        ).collect()
-        uid_of = self._uids_for_doc_ids([r["doc_id"] for r in rows])
-        for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
-            if r["doc_id"] in uid_of:
-                out[r["query_id"]].append(
-                    (uid_of[r["doc_id"]], r["score"])
-                )
+        )
+        uid_of = self._uids_for_doc_ids([d for _, d, _, _ in rows])
+        for qid, d, score, _ in sorted(rows, key=lambda r: (r[0], r[3])):
+            if d in uid_of:
+                out[qid].append((uid_of[d], score))
         return out
 
     def _ann_centroids(self, src: DataFrame, n_live: int) -> list:
@@ -1143,34 +1179,26 @@ class SparkHybridRetriever:
         hybrid_retriever.py:379-428). Ratio pinned to 0.5 regardless
         of kwargs — the reference accepts-and-ignores them.
 
-        Batched: one Spark job set per call regardless of
-        len(query_texts) (all queries ride one search_sharded and one
-        knn_bruteforce); per-query RRF runs driver-side on the tiny
-        collected top-2k lists. Embeddings are fetched ONLY when
+        Batched: all queries ride one BM25 search and one KNN pass;
+        per-query RRF runs driver-side on the tiny top-2k lists. On a
+        loaded state (vector cache resident) an interactive call
+        launches no Spark job, fresh terms included: postings, dfs and
+        texts come through the driver-side parquet reader, uids from
+        the vector cache. Embeddings are fetched ONLY when
         requested via ``include``, and only for the fused top-k uids —
         never a full-table collect."""
         if not isinstance(query_texts, list):
             query_texts = [query_texts]
         include = include or ["documents", "metadatas", "distances"]
 
-        # the legs are independent job sets — overlap them from two
-        # driver threads so one leg's scheduling tail back-fills the
-        # other's idle executors (guide §2.6); wall-clock becomes
-        # max(leg) instead of sum. The warm-cache validation runs
-        # ONCE up front so neither thread clears driver caches while
-        # the other iterates them.
-        from concurrent.futures import ThreadPoolExecutor
-
+        # one warm-key validation per call, then both legs in this
+        # thread: the vector leg first, so the BM25 leg's doc_id ->
+        # uid lookup reads a freshly validated vector cache. Both legs
+        # launch no Spark job on a loaded state, so a thread pool
+        # would only add GIL hand-offs.
         self._warm_caches()
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_b = pool.submit(
-                self._bm25_lists, query_texts, n_results * 2
-            )
-            f_v = pool.submit(
-                self._vector_lists, query_texts, n_results * 2
-            )
-            bm25_lists = f_b.result()
-            vector_lists = f_v.result()
+        vector_lists = self._vector_lists(query_texts, n_results * 2)
+        bm25_lists = self._bm25_lists(query_texts, n_results * 2)
 
         fused_all: List[List[Tuple[str, float]]] = []
         for bm25_results, vector_results in zip(bm25_lists, vector_lists):
@@ -1533,12 +1561,13 @@ class SparkHybridRetriever:
 
     def prewarm(self, max_terms: int = 4096) -> int:
         """Opt-in cold-start warm-up: refill the postings LRU + df
-        cache from the persisted hot set with one bucket-pruned
-        collect, and reload the persisted uid pairs, so the first
-        repeat interactive query on a reloaded handle launches ZERO
-        Spark jobs. Staleness semantics unchanged: posting rows fetch
-        from the live generation overlay; uid pairs are immutable
-        under the id expression (see save_hot_set)."""
+        cache from the persisted hot set (postings_rows: the
+        driver-side reader below its bounds), and reload the persisted
+        uid pairs, so the first repeat interactive query on a reloaded
+        handle launches ZERO Spark jobs. Staleness semantics
+        unchanged: posting rows fetch from the live generation
+        overlay; uid pairs are immutable under the id expression (see
+        save_hot_set)."""
         import json as _json
 
         if self._index is None:

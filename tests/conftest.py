@@ -21,6 +21,34 @@ def spark():
     yield s
 
 
+class JobCounter:
+    """Spark jobs launched since the last ``mark()``, counted as the
+    change in the highest job id (perfbench's SparkCounter idiom). The
+    status tracker's job LIST is capped at spark.ui.retainedJobs
+    (1000) and trimmed in batches, so under the session-scoped
+    ``spark`` fixture its length stops tracking launches once the
+    suite has run ~1000 jobs; the highest id keeps rising."""
+
+    def __init__(self, spark):
+        self._tracker = spark.sparkContext.statusTracker()
+        self.mark()
+
+    def _last_id(self) -> int:
+        ids = self._tracker.getJobIdsForGroup(None)
+        return max(ids) if ids else -1
+
+    def mark(self) -> None:
+        self._j0 = self._last_id()
+
+    def since(self) -> int:
+        return self._last_id() - self._j0
+
+
+@pytest.fixture
+def jobs(spark):
+    return JobCounter(spark)
+
+
 @pytest.fixture(scope="session")
 def reference_bm25_cls():
     """The reference's pure-Python BM25 class, loaded straight from its

@@ -677,3 +677,38 @@ def test_packing_groups_scale_rule(spark):
         map(tuple, pack_sequences(docs, max_tokens=8).collect())
     )
     assert auto == explicit == again
+
+
+def test_simhash_signature_pinned_and_byte_order_explicit(spark):
+    """Fixed inputs keep fixed signatures, and the hash bit matrix reads
+    bit j of each hash whatever the array's byte order: a native
+    uint8 view of a big-endian array (what a big-endian host holds)
+    would move bit 0 to bit 56 and silently change signatures."""
+    import numpy as np
+
+    from bm25_chroma_spark.operators.dedup import (
+        _hash_bit_rows,
+        make_simhash64_udf,
+    )
+
+    h = np.array([1, 0x8000000000000001, 0xFF00], dtype=np.uint64)
+    bits = _hash_bit_rows(h.astype(">u8"))
+    assert (bits == _hash_bit_rows(h)).all()
+    assert list(np.flatnonzero(bits[:, 1])) == [0, 63]
+    assert list(np.flatnonzero(bits[:, 2])) == list(range(8, 16))
+
+    texts = ["the quick brown fox jumps over the lazy dog",
+             "spark shuffle join"]
+    df = spark.createDataFrame(list(enumerate(texts)), "i long, text string")
+    want = {
+        "blake2b": [1932188759623088695, -1072279642220142255],
+        "md5": [-3574015537522617329, -7765753696078964368],
+    }
+    for variant, sigs in want.items():
+        got = [
+            r["sig"]
+            for r in df.orderBy("i").select(
+                make_simhash64_udf(variant)(F.col("text")).alias("sig")
+            ).collect()
+        ]
+        assert got == sigs, variant

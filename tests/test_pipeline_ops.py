@@ -374,6 +374,31 @@ def test_stratified_sample_df_matches_dict_variant(spark):
         assert "__ss_grp" in keys, f"corpus-side shuffle: {keys}"
 
 
+
+def test_stratified_sample_df_conflicting_duplicate_rates_raise(spark):
+    """Duplicate group rows with CONFLICTING rates fail the query
+    instead of keeping an arbitrary one; agreeing duplicates collapse
+    (no fan-out of corpus rows)."""
+    df = _mix_df(spark, 200)
+    agree = spark.createDataFrame(
+        [(g, r) for g, r in _MIX_RATES.items()]
+        + [(g, r) for g, r in _MIX_RATES.items()],
+        "src string, rate double",
+    )
+    got = stratified_sample_df(df, agree, "src", salt="m5").collect()
+    want = stratified_sample(df, _MIX_RATES, "src", salt="m5").collect()
+    assert sorted(r["doc_id"] for r in got) == \
+        sorted(r["doc_id"] for r in want)
+
+    g0, r0 = next(iter(_MIX_RATES.items()))
+    clash = spark.createDataFrame(
+        [(g, r) for g, r in _MIX_RATES.items()]
+        + [(g0, 1.0 if r0 < 1.0 else 0.0)],
+        "src string, rate double",
+    )
+    with pytest.raises(Exception, match="conflicting rates"):
+        stratified_sample_df(df, clash, "src", salt="m5").collect()
+
 def _spark_words_model(text: str) -> list[str]:
     """Exact Python mirror of the engine's `_words` expression: strip
     ALL leading/trailing ASCII whitespace (the regexp_replace the

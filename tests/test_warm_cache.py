@@ -15,10 +15,6 @@ import pytest
 from bm25_chroma_spark.plans.retriever import SparkHybridRetriever
 
 
-def _njobs(spark) -> int:
-    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
-
-
 def _mk(spark, tmp_path, n=120, name="wstate") -> SparkHybridRetriever:
     r = SparkHybridRetriever(spark, str(tmp_path / name))
     texts = [
@@ -33,7 +29,7 @@ def _mk(spark, tmp_path, n=120, name="wstate") -> SparkHybridRetriever:
     return r
 
 
-def test_warm_facade_zero_jobs_and_identical(spark, tmp_path):
+def test_warm_facade_zero_jobs_and_identical(spark, tmp_path, jobs):
     """Second identical query()/search_bm25/hybrid_search: zero Spark
     jobs, byte-identical results (floats compared exactly — the warm
     engines are sequential-fold twins, not approximations)."""
@@ -42,33 +38,33 @@ def test_warm_facade_zero_jobs_and_identical(spark, tmp_path):
 
     cold = r.query(q, n_results=5)
     assert cold["ids"][0], "fixture must produce hits"
-    j0 = _njobs(spark)
+    jobs.mark()
     warm = r.query(q, n_results=5)
-    assert _njobs(spark) == j0, "warm query() must launch no Spark job"
+    assert jobs.since() == 0, "warm query() must launch no Spark job"
     assert warm == cold
 
     b_cold = r.search_bm25("alpha spark document", top_k=5)
-    j0 = _njobs(spark)
+    jobs.mark()
     assert r.search_bm25("alpha spark document", top_k=5) == b_cold
-    assert _njobs(spark) == j0
+    assert jobs.since() == 0
 
     h_cold = r.hybrid_search("alpha spark document", top_k=5)
-    j0 = _njobs(spark)
+    jobs.mark()
     assert r.hybrid_search("alpha spark document", top_k=5) == h_cold
-    assert _njobs(spark) == j0
+    assert jobs.since() == 0
     assert r.last_vector_engine == "driver-cache"
     assert r.last_vector_route == "exact"
 
 
-def test_warm_empty_result_zero_jobs(spark, tmp_path):
+def test_warm_empty_result_zero_jobs(spark, tmp_path, jobs):
     """A no-match query must not pay a job either: empty local-DAAT
     results plan as an empty LocalTableScan, not Scan ExistingRDD
     (the pandas->Arrow empty-frame fallback wart, fixed r6)."""
     r = _mk(spark, tmp_path, n=40)
     assert r.search_bm25("zzzzunknown qqqterm", top_k=5) == []
-    j0 = _njobs(spark)
+    jobs.mark()
     assert r.search_bm25("zzzzunknown qqqterm", top_k=5) == []
-    assert _njobs(spark) == j0
+    assert jobs.since() == 0
 
 
 def test_vec_cache_bit_identical_to_spark_knn(spark, tmp_path):
@@ -140,15 +136,15 @@ def test_warm_cache_invalidated_by_reset_reingest(spark, tmp_path):
     assert vec and vec[0][0] in ("a", "b")
 
 
-def test_warm_query_includes_embeddings_from_cache(spark, tmp_path):
+def test_warm_query_includes_embeddings_from_cache(spark, tmp_path, jobs):
     """query(include=['embeddings']) served from the vector cache must
     return the same floats as the distributed fetch."""
     r = _mk(spark, tmp_path, n=25)
     q = ["alpha spark document"]
     cold = r.query(q, n_results=3, include=["documents", "embeddings"])
-    j0 = _njobs(spark)
+    jobs.mark()
     warm = r.query(q, n_results=3, include=["documents", "embeddings"])
-    assert _njobs(spark) == j0
+    assert jobs.since() == 0
     assert warm == cold
     assert warm["embeddings"][0] and len(warm["embeddings"][0][0]) > 0
 
@@ -228,7 +224,7 @@ def test_postings_cache_budget_lowered_at_runtime(spark, tmp_path):
     assert idx._postings_cache_used == 0
 
 
-def test_postings_too_big_marker_routes_distributed(spark, tmp_path):
+def test_postings_too_big_marker_routes_distributed(spark, tmp_path, jobs):
     """A term whose rows exceed the whole postings budget is marked
     too-big (generation-tagged) and subsequent queries on it take the
     distributed path instead of a driver collect per query (ADVICE
@@ -244,9 +240,9 @@ def test_postings_too_big_marker_routes_distributed(spark, tmp_path):
     assert mid == cold
     assert not idx.postings_cacheable(["alpha"])
     # now the gate must refuse the driver path -> Spark jobs run
-    j0 = _njobs(spark)
+    jobs.mark()
     hot = r.search_bm25(q, top_k=3)
-    assert _njobs(spark) > j0, "too-big terms must stay distributed"
+    assert jobs.since() > 0, "too-big terms must stay distributed"
     assert hot == cold
 
 
@@ -278,7 +274,7 @@ def test_queries_df_binds_vector_column_by_name(spark):
         _queries_df(spark, noid)
 
 
-def test_prewarm_reloaded_handle_first_repeat_query(spark, tmp_path):
+def test_prewarm_reloaded_handle_first_repeat_query(spark, tmp_path, jobs):
     """VERDICT-r6 #4: a retriever reconstructed on a fresh driver
     starts cold; after save_hot_set() + prewarm() the FIRST repeat
     query runs the driver DAAT (at most the bounded uid-enrichment
@@ -292,10 +288,10 @@ def test_prewarm_reloaded_handle_first_repeat_query(spark, tmp_path):
     r2 = SparkHybridRetriever(spark, str(tmp_path / "prewarm"))
     warmed = r2.prewarm()
     assert warmed > 0
-    j0 = _njobs(spark)
+    jobs.mark()
     got = r2.search_bm25(q, top_k=5)
     assert got == cold
-    assert _njobs(spark) == j0, (
+    assert jobs.since() == 0, (
         "prewarmed first repeat query must launch no Spark job: "
         "postings + df come from the hot set, uids from the "
         "persisted immutable (id -> uid) pairs"
@@ -356,7 +352,7 @@ def test_prewarm_uid_pairs_gated_by_id_expr_fingerprint(spark, tmp_path):
     )
 
 
-def test_prewarm_vector_leg_reloaded_handle(spark, tmp_path):
+def test_prewarm_vector_leg_reloaded_handle(spark, tmp_path, jobs):
     """VERDICT-r7 #6: save_hot_set persists the vector-cache
     eligibility decision; a reloaded handle's prewarm() reloads the
     matrix (one toPandas job, inside prewarm), so its FIRST repeat
@@ -369,10 +365,10 @@ def test_prewarm_vector_leg_reloaded_handle(spark, tmp_path):
 
     r2 = SparkHybridRetriever(spark, str(tmp_path / "vecwarm"))
     assert r2.prewarm() > 0
-    j0 = _njobs(spark)
+    jobs.mark()
     got = r2.hybrid_search(q, top_k=5)
     assert got == cold
-    assert _njobs(spark) == j0, (
+    assert jobs.since() == 0, (
         "prewarmed first repeat hybrid query must launch no Spark "
         "job: postings + uids from the hot set, the vector matrix "
         "from the prewarm reload"
