@@ -247,11 +247,19 @@ def _gram_stats_batch(texts, n: int):
     leading/trailing whitespace (ASCII \\s, like Java), split on
     \\s+. Docs that are null return the null marker; blank docs and
     docs with fewer than n words count 0 everywhere (word_ngrams'
-    empty-array branches)."""
+    empty-array branches).
+
+    Java's ``$`` (in _words' strip and _is_blank's ``^\\s*$``) also
+    matches before ONE final line terminator: LF, CR, CR LF, NEL,
+    U+2028 or U+2029. The last three are not ASCII \\s, so whitespace
+    before them is still stripped, and whitespace plus one of them is
+    blank; Python's ``$`` knows only a final LF, hence ``eol`` below."""
     import re
 
+    eol = r"(?:\r\n|[\n\r\x85\u2028\u2029])?\Z"
     ws_split = re.compile(r"\s+", re.ASCII)
-    strip_re = re.compile(r"^\s+|\s+$", re.ASCII)
+    strip_re = re.compile(r"^\s+|\s+(?=" + eol + ")", re.ASCII)
+    blank_re = re.compile(r"\s*" + eol, re.ASCII)
     n_docs = len(texts)
     total = np.zeros(n_docs, dtype=np.int64)
     distinct = np.zeros(n_docs, dtype=np.int64)
@@ -263,10 +271,11 @@ def _gram_stats_batch(texts, n: int):
             isnull[j] = True
             toks_per_doc.append(())
             continue
-        s = strip_re.sub("", str(t).lower())
-        if not s:
+        t = str(t)
+        if blank_re.match(t):
             toks_per_doc.append(())
             continue
+        s = strip_re.sub("", t.lower())
         tk = ws_split.split(s)
         toks_per_doc.append(tk if len(tk) >= n else ())
     counts = np.fromiter(

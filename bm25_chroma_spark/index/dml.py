@@ -13,9 +13,30 @@ Physical design: the base build is generation 0; every DML batch
 writes generation k containing ONLY re-encoded shard rows for the
 affected (term, segment) pairs (terms appearing in removed or added
 texts — all other shards are untouched, so DML cost scales with the
-batch's vocabulary, not the corpus). A (term, segment) whose postings
-empty out gets a df=0 tombstone row. Readers overlay generations and
-keep the newest row per (term, segment).
+batch's vocabulary, not the corpus) plus a doc_stats delta. A (term,
+segment) whose postings empty out gets a df=0 tombstone row. Readers
+overlay generations and keep the newest row per (term, segment).
+
+Two paths write the same generation (pinned byte for byte by
+tests/test_dml_paths.py):
+
+* driver: a small batch runs without the Spark job floor. Its inputs
+  are collected (at most reader.MAX_POINT_IDS rows), tokenized with
+  tokenize_py, the ids' prior doc lengths and then, one term bucket at
+  a time, the affected shard rows are point-read by index/reader.py,
+  decoded as one slice, merged and re-encoded with the build's codec;
+  the generation is written with pyarrow in the Spark schemas. Three bounds keep it small: the id bound, the
+  affected terms' summed df (wand.CACHE_MAX_QUERY_POSTINGS) and the
+  reader's byte budget (ShardedIndex.postings_cache_bytes).
+* distributed: everything above a bound (and an index whose
+  stats.json predates ``sum_dl``) runs as Spark joins; victim ids and
+  affected terms stay DataFrames end to end.
+
+Corpus stats: stats.json keeps ``n_docs`` and the integer ``sum_dl``.
+The driver path updates them arithmetically from the ids' prior and
+new doc lengths; the distributed path re-aggregates the live
+doc_stats. ``avgdl = sum_dl / n_docs`` either way, bit-identical to
+Spark's avg(dl): an integer sum below 2^53 is exact in double.
 
 This is hard-delete semantics (IDF reflects removals immediately,
 matching the reference's _compute_idf over the post-delete list), not
@@ -26,7 +47,7 @@ from __future__ import annotations
 
 import json
 from pathlib import Path
-from typing import Optional
+from typing import NamedTuple, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -85,18 +106,25 @@ def apply_dml(
     delete_docs: (doc_id long, text string) — removed; text is the
                  stored content. Unknown ids no-op.
 
-    Victim ids and affected terms stay DataFrames end-to-end
-    (broadcast semi/anti joins); only the bounded bucket list reaches
-    the driver, so bulk deletes of millions of docs never build a
-    driver-side id list.
+    A batch of at most reader.MAX_POINT_IDS input rows whose affected
+    terms sum to at most wand.CACHE_MAX_QUERY_POSTINGS postings, and
+    whose point reads fit ShardedIndex.postings_cache_bytes, runs on
+    the driver (_driver_batch): no Spark job when both inputs are
+    local relations, one limited collect otherwise. Stats then move
+    arithmetically: n_docs and sum_dl change by the ids' new minus
+    prior live counts and lengths, and avgdl = sum_dl / n_docs. Any
+    other batch, or an index whose stats.json lacks sum_dl, takes the
+    distributed path (_distributed_batch), which re-aggregates the
+    live doc_stats and so also writes sum_dl.
+
+    Both paths stage the generation in a dot-prefixed dir, publish it
+    with one rename and then write stats.json (see recover_index).
 
     Returns {generation, affected_terms, live_docs, avgdl}.
     """
-    from pyspark.sql.types import IntegerType
-
-    from bm25_chroma_spark.index.shards import ShardedIndex, hash_segment_np
-
     import shutil
+
+    from bm25_chroma_spark.index.shards import ShardedIndex
 
     base = Path(index_dir)
     # ShardedIndex.refresh() runs crash recovery (finish a committed
@@ -104,7 +132,6 @@ def apply_dml(
     # before we read stats
     index = ShardedIndex(spark, index_dir)
     stats = _read_stats(base)
-    cfg = BM25Config(**stats["config"])
     gen_root = base / "gen"
     gen_root.mkdir(parents=True, exist_ok=True)
     # next generation = 1 + max(stats, dirs on disk): recover_index
@@ -121,13 +148,328 @@ def apply_dml(
     tmp_dir = gen_root / f".tmp_gen_{gen:05d}"
     gen_dir = gen_root / f"gen_{gen:05d}"
 
+    inputs = [
+        None if df is None
+        else df.select(F.col("doc_id").cast("long"), "text")
+        for df in (upserts, delete_docs)
+    ]
+    batch = (
+        _driver_batch(index, *inputs) if "sum_dl" in stats else None
+    )
+    if batch is not None:
+        batch.write(tmp_dir)
+        n_affected = batch.n_affected
+    else:
+        n_affected = _distributed_batch(spark, index, *inputs, tmp_dir)
+
+    # COMMIT POINT: one atomic rename publishes the complete
+    # generation (shards + doc_stats together) to readers. A crash
+    # before this leaves only the invisible .tmp_ staging dir (readers
+    # glob gen_*); a crash after — before the stats write below — is
+    # healed by recover_index() on next open, which reconciles
+    # stats.json with the generations that landed on disk. This closes
+    # the torn-generation window where gen_K/shards was visible to the
+    # overlay before gen_K/doc_stats and stats.json existed.
+    tmp_dir.rename(gen_dir)
+
+    if batch is not None:
+        n_docs = stats["n_docs"] + batch.d_docs
+        sum_dl = stats["sum_dl"] + batch.d_sum_dl
+    else:
+        n_docs, sum_dl = _live_totals(spark, base, upto_gen=gen)
+    _set_totals(stats, n_docs, sum_dl)
+    stats["generation"] = gen
+    _write_stats(base, stats)
+    return {
+        "generation": gen,
+        "affected_terms": n_affected,
+        "live_docs": stats["n_docs"],
+        "avgdl": stats["avgdl"],
+    }
+
+
+def _set_totals(stats: dict, n_docs: int, sum_dl: int) -> None:
+    stats["n_docs"] = int(n_docs)
+    stats["sum_dl"] = int(sum_dl)
+    stats["avgdl"] = sum_dl / n_docs if n_docs else 0.0
+
+
+def _live_totals(spark, base: Path, upto_gen: Optional[int] = None):
+    """(n_docs, sum_dl) over the live doc_stats overlay: one agg."""
+    row = _live_doc_stats(spark, base, upto_gen).agg(
+        F.count("*").alias("n"), F.sum("dl").alias("sum_dl")
+    ).collect()[0]
+    return int(row["n"] or 0), int(row["sum_dl"] or 0)
+
+
+def _is_local(df: DataFrame) -> bool:
+    """True when the optimized plan is a driver-side LocalRelation
+    (e.g. a pandas-built frame and projections of it), whose collect
+    launches no Spark job."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation"
+
+
+def _collect_small(frames, bound: int):
+    """The (doc_id, text) rows of each frame in ``frames`` (None =
+    no rows) as (int64 ids, texts), or None when they hold more than
+    ``bound`` rows together. Local relations collect with no job; any
+    other input set is one limited union collected in one job."""
+    import numpy as np
+
+    live = [(i, f) for i, f in enumerate(frames) if f is not None]
+    rows = [([], []) for _ in frames]
+    if all(_is_local(f.limit(bound + 1)) for _, f in live):
+        for i, f in live:
+            got = f.limit(bound + 1).collect()
+            rows[i] = ([r[0] for r in got], [r[1] for r in got])
+    elif live:
+        # one limit over the union: under AQE every limit's exchange
+        # is a job of its own
+        u = None
+        for i, f in live:
+            f = f.withColumn("_src", F.lit(i))
+            u = f if u is None else u.unionByName(f)
+        pdf = u.limit(bound + 1).toPandas()
+        for i, _ in live:
+            part = pdf[pdf["_src"] == i]
+            rows[i] = (part["doc_id"].tolist(), part["text"].tolist())
+    if sum(len(ids) for ids, _ in rows) > bound:
+        return None
+    return [(np.asarray(ids, dtype=np.int64), texts) for ids, texts in rows]
+
+
+class _DriverBatch(NamedTuple):
+    """A DML batch merged on the driver, ready to write: the
+    generation's shard rows (None when no term is affected) and
+    doc_stats delta as Arrow tables, plus the stats deltas."""
+
+    shards: object
+    doc_stats: object
+    n_affected: int
+    d_docs: int
+    d_sum_dl: int
+
+    def write(self, tmp_dir: Path) -> None:
+        import pyarrow.parquet as pq
+
+        for name, table in (("shards", self.shards),
+                            ("doc_stats", self.doc_stats)):
+            if table is not None:
+                (tmp_dir / name).mkdir(parents=True)
+                pq.write_table(table, tmp_dir / name / "part-00000.parquet")
+
+
+def _arrow_schema(ddl: str):
+    """The Arrow schema Spark itself maps ``ddl`` to, so pyarrow-written
+    generation files read back as the Spark-written ones do."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    return to_arrow_schema(_parse_datatype_string(ddl))
+
+
+def _driver_batch(index, upserts, delete_docs) -> Optional[_DriverBatch]:
+    """The driver path of apply_dml, or None when a bound sends the
+    batch to the distributed path. Reads only; writes nothing."""
+    from collections import Counter
+
+    import numpy as np
+    import pyarrow as pa
+
+    from bm25_chroma_spark.functions.tokenizer import tokenize_py
+    from bm25_chroma_spark.index import reader, wand
+    from bm25_chroma_spark.index.shards import bucket_of
+
+    got = _collect_small([upserts, delete_docs], reader.MAX_POINT_IDS)
+    if got is None:
+        return None
+    (up_ids, up_texts), (del_ids, del_texts) = got
+
+    # tokenize_docs semantics: zero-token docs are dropped (they add
+    # no postings and leave the index as a deleted doc would)
+    terms: set = set()
+    for t in del_texts:
+        terms.update(tokenize_py(t))
+    new_ids, new_dl, new_tf = [], [], []
+    for d, t in zip(up_ids.tolist(), up_texts):
+        toks = tokenize_py(t)
+        terms.update(toks)
+        if toks:
+            new_ids.append(d)
+            new_dl.append(len(toks))
+            new_tf.append(Counter(toks))
+    terms = sorted(terms)
+
+    # the affected terms' summed df must fit the query bound
+    if terms:
+        dfs = reader.shard_rows(index, terms, ("term", "segment", "df"))
+        if dfs is None:
+            return None
+        if sum(int(r["df"]) for r in dfs) > wand.CACHE_MAX_QUERY_POSTINGS:
+            return None
+    victims = np.unique(np.concatenate((up_ids, del_ids)))
+    prior = reader.doc_stats_rows(
+        index.path, victims.tolist(), index.postings_cache_bytes
+    )
+    if prior is None:
+        return None
+
+    # merged one term bucket at a time: a bucket's rows, decoded
+    # postings and encoder objects are freed before the next bucket's
+    # are read, which keeps the driver's peak memory to one bucket
+    by_bucket: dict = {}
+    for t in terms:
+        by_bucket.setdefault(
+            bucket_of(t, index.config.num_term_buckets), []
+        ).append(t)
+    tables = []
+    for b_terms in by_bucket.values():
+        rows = reader.shard_rows(index, b_terms)
+        if rows is None:
+            return None
+        tables.append(_merged_shards(
+            index, b_terms, rows, victims, (new_ids, new_dl, new_tf)
+        ))
+        del rows
+    shards = pa.concat_tables(tables) if tables else None
+
+    # doc_stats delta: every victim not re-added with >= 1 token goes
+    # to dl=0 (plain deletes, unknown ids and upserts-to-empty-text —
+    # the reference removes first, then bails on empty tokens,
+    # bm25.py:151-156); re-added docs get their fresh dl
+    dl_of = dict(zip(new_ids, new_dl))
+    ds_ids = victims.tolist()
+    doc_stats = pa.Table.from_pydict(
+        {"doc_id": ds_ids, "dl": [dl_of.get(d, 0) for d in ds_ids]},
+        schema=_arrow_schema("doc_id long, dl int"),
+    )
+    d_docs = d_sum = 0
+    for d in ds_ids:
+        was, now = prior.get(d, 0), dl_of.get(d, 0)
+        d_docs += (now > 0) - (was > 0)
+        d_sum += now - was
+    return _DriverBatch(shards, doc_stats, len(terms), d_docs, d_sum)
+
+
+def _merged_shards(index, terms, old_rows, victims, new):
+    """Shard rows of ``terms`` as an Arrow table: their surviving
+    stored postings (``old_rows`` decoded as one slice, ``victims``
+    dropped) plus the batch's ``new`` postings of these terms (ids,
+    doc lengths, term Counters), re-capped, re-encoded per (bucket,
+    segment) with the build's codec, and a df=0 tombstone for every
+    (term, segment) that emptied out. Each (bucket, segment) becomes
+    Arrow as soon as it is encoded, so its per-row Python objects
+    never pile up on the driver."""
+    import numpy as np
+    import pyarrow as pa
+
+    from bm25_chroma_spark.index.encode import decode_flat_slice
+    from bm25_chroma_spark.index.shards import (
+        _encode_flat_slice,
+        bucket_of,
+        hash_segment_np,
+    )
+
+    cfg = index.config
+    mine = set(terms)
+    new_ids, new_dl, new_tf = new
+    new_tf = [{t: f for t, f in c.items() if t in mine} for c in new_tf]
+    # surviving stored postings of the affected terms ...
+    per_row, o_doc, o_tf, o_dl = decode_flat_slice(
+        [r["doc_bytes"] for r in old_rows],
+        [r["tf_bytes"] for r in old_rows],
+        [r["dl_bytes"] for r in old_rows],
+        [r["blocks"] for r in old_rows],
+    )
+    keep = ~np.isin(o_doc, victims)
+    # ... plus the batch's new postings
+    n_new = [len(c) for c in new_tf]
+    n_doc = np.repeat(np.asarray(new_ids, dtype=np.int64), n_new)
+    term = np.concatenate((
+        np.repeat(np.array([r["term"] for r in old_rows], dtype=object),
+                  per_row)[keep],
+        np.array([t for c in new_tf for t in c], dtype=object),
+    ))
+    doc = np.concatenate((o_doc[keep], n_doc))
+    tf = np.concatenate((
+        o_tf[keep],
+        np.array([f for c in new_tf for f in c.values()], dtype=np.int64),
+    ))
+    dl = np.concatenate(
+        (o_dl[keep], np.repeat(np.asarray(new_dl, dtype=np.int64), n_new))
+    )
+    seg = np.concatenate((
+        np.repeat(np.array([r["segment"] for r in old_rows],
+                           dtype=np.int64), per_row)[keep],
+        hash_segment_np(n_doc, cfg.salt_factor),
+    ))
+    codes, uniq = pd.factorize(term)
+    codes = codes.astype(np.int64)
+    if cfg.max_postings_per_term and index.build_cap_physical:
+        # reference flush semantics (bm25.py:176-195): re-truncate each
+        # affected term to the cap in (tf desc, doc_id asc) order
+        order = np.lexsort((doc, -tf, codes))
+        c = codes[order]
+        starts = np.flatnonzero(np.r_[True, c[1:] != c[:-1]])
+        rank = np.arange(len(c)) - np.repeat(
+            starts, np.diff(np.r_[starts, len(c)])
+        )
+        k = order[rank < cfg.max_postings_per_term]
+        codes, doc, tf, dl, seg = codes[k], doc[k], tf[k], dl[k], seg[k]
+    bucket_map = {t: bucket_of(t, cfg.num_term_buckets) for t in terms}
+    bucket = np.array([bucket_map[t] for t in uniq], dtype=np.int64)[codes]
+
+    schema = _arrow_schema(SHARD_DDL)
+    tables = []
+    order = np.lexsort((seg, bucket))
+    cut = np.flatnonzero(
+        np.diff(bucket[order]) | np.diff(seg[order])
+    ) + 1
+    live_keys = set()
+    for g in np.split(order, cut) if len(order) else []:
+        part = _encode_flat_slice(
+            codes[g], uniq, doc[g], tf[g], dl[g], int(bucket[g[0]]),
+            int(seg[g[0]]), cfg.block_size,
+        )
+        live_keys.update((t, int(seg[g[0]])) for t in part["term"])
+        tables.append(pa.Table.from_pandas(
+            part, schema=schema, preserve_index=False
+        ).replace_schema_metadata(None))
+
+    # tombstones: (term, segment) that existed but emptied out
+    gone = sorted(
+        {(r["term"], int(r["segment"])) for r in old_rows} - live_keys
+    )
+    if gone:
+        tables.append(pa.Table.from_pydict({
+            "bucket": [bucket_map[t] for t, _ in gone],
+            "term": [t for t, _ in gone],
+            "segment": [s for _, s in gone],
+            "df": [0] * len(gone),
+            "doc_bytes": [b""] * len(gone),
+            "tf_bytes": [b""] * len(gone),
+            "dl_bytes": [b""] * len(gone),
+            "blocks": [[] for _ in gone],
+        }, schema=schema))
+    return pa.concat_tables(tables) if tables else schema.empty_table()
+
+
+def _distributed_batch(spark, index, upserts, delete_docs, tmp_dir) -> int:
+    """The distributed path of apply_dml: writes the staged generation
+    under ``tmp_dir`` with Spark. Victim ids and affected terms stay
+    DataFrames end-to-end (broadcast semi/anti joins); only the
+    bounded bucket list reaches the driver, so bulk deletes of
+    millions of docs never build a driver-side id list. Returns the
+    affected term count."""
+    from pyspark.sql.types import IntegerType
+
+    from bm25_chroma_spark.index.shards import hash_segment_np
+
+    cfg = index.config
     empty = spark.createDataFrame([], "doc_id long, text string")
-    upserts = (upserts or empty).select(
-        F.col("doc_id").cast("long"), "text"
-    )
-    delete_docs = (delete_docs or empty).select(
-        F.col("doc_id").cast("long"), "text"
-    )
+    upserts = empty if upserts is None else upserts
+    delete_docs = empty if delete_docs is None else delete_docs
 
     # victims = explicit deletes + upserts of existing ids
     victims = delete_docs.unionByName(upserts).select("doc_id", "text")
@@ -249,32 +591,7 @@ def apply_dml(
     ds_delta.write.mode("overwrite").parquet(str(tmp_dir / "doc_stats"))
     new_tok.unpersist()
     affected_terms_df.unpersist()
-
-    # COMMIT POINT: one atomic rename publishes the complete
-    # generation (shards + doc_stats together) to readers. A crash
-    # before this leaves only the invisible .tmp_ staging dir (readers
-    # glob gen_*); a crash after — before the stats write below — is
-    # healed by recover_index() on next open, which reconciles
-    # stats.json with the generations that landed on disk. This closes
-    # the torn-generation window where gen_K/shards was visible to the
-    # overlay before gen_K/doc_stats and stats.json existed.
-    tmp_dir.rename(gen_dir)
-
-    # recompute corpus stats over live docs (cheap narrow agg)
-    live = _live_doc_stats(spark, base, upto_gen=gen)
-    row = live.agg(
-        F.count("*").alias("n"), F.avg("dl").alias("avgdl")
-    ).collect()[0]
-    stats["n_docs"] = int(row["n"] or 0)
-    stats["avgdl"] = float(row["avgdl"] or 0.0)
-    stats["generation"] = gen
-    _write_stats(base, stats)
-    return {
-        "generation": gen,
-        "affected_terms": n_affected,
-        "live_docs": stats["n_docs"],
-        "avgdl": stats["avgdl"],
-    }
+    return n_affected
 
 
 _COMPACT_MARKER = "compaction_commit.json"
@@ -336,8 +653,9 @@ def recover_index(spark: SparkSession, base: Path) -> dict:
        see _finish_compaction);
     2. reconcile stats.json with DML generations that rename-committed
        but whose stats write was lost (apply_dml publishes the gen dir
-       atomically BEFORE updating stats.json) — recompute N/avgdl over
-       the live overlay and bump the recorded generation.
+       atomically BEFORE updating stats.json) — recompute N, sum_dl
+       and avgdl over the live overlay and bump the recorded
+       generation.
 
     Idempotent; on a clean index this is a marker check + a glob.
     Returns the (possibly updated) stats dict."""
@@ -351,11 +669,7 @@ def recover_index(spark: SparkSession, base: Path) -> dict:
     )
     disk_gen = max(disk) if disk else 0
     if disk_gen > int(stats.get("generation", 0)):
-        row = _live_doc_stats(spark, base).agg(
-            F.count("*").alias("n"), F.avg("dl").alias("avgdl")
-        ).collect()[0]
-        stats["n_docs"] = int(row["n"] or 0)
-        stats["avgdl"] = float(row["avgdl"] or 0.0)
+        _set_totals(stats, *_live_totals(spark, base))
         stats["generation"] = disk_gen
         _write_stats(base, stats)
     return stats

@@ -24,7 +24,7 @@ merges and corpus growth, unlike storing a precomputed max score.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import List, Tuple
+from typing import List, Sequence, Tuple
 
 import numpy as np
 
@@ -53,9 +53,28 @@ def varint_encode(values: np.ndarray) -> Tuple[bytes, np.ndarray]:
     return out.tobytes(), nb
 
 
+# bytes decoded per pass: the per-byte pass below holds ~50 bytes of
+# temporaries per input byte, so a long stream (a whole-slice decode of
+# full-range doc ids, ~9 bytes per delta) is cut at value boundaries
+_DECODE_CHUNK = 1 << 14
+
+
 def varint_decode(buf: bytes) -> np.ndarray:
     """Decode a full LEB128 stream back to uint64."""
     b = np.frombuffer(buf, dtype=np.uint8)
+    if b.size <= _DECODE_CHUNK:
+        return _varint_decode_pass(b)
+    ends = np.flatnonzero(b < 0x80) + 1  # one past each value's end
+    cuts = np.unique(ends[np.searchsorted(
+        ends, np.arange(_DECODE_CHUNK, b.size, _DECODE_CHUNK), "right"
+    ) - 1])
+    bounds = np.concatenate(([0], cuts[cuts < b.size], [b.size]))
+    return np.concatenate([
+        _varint_decode_pass(b[s:e]) for s, e in zip(bounds[:-1], bounds[1:])
+    ])
+
+
+def _varint_decode_pass(b: np.ndarray) -> np.ndarray:
     if b.size == 0:
         return np.zeros(0, dtype=np.uint64)
     terminal = (b & 0x80) == 0
@@ -156,6 +175,48 @@ def decode_all(enc_doc: bytes, enc_tf: bytes, enc_dl: bytes,
         )
         pos = e
     return doc_ids, tfs, dls
+
+
+def decode_flat_slice(
+    doc_bytes: Sequence[bytes],
+    tf_bytes: Sequence[bytes],
+    dl_bytes: Sequence[bytes],
+    blocks: Sequence[Sequence[dict]],
+) -> Tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Whole-slice decode of many shard rows at once, the mirror of
+    the build's _encode_flat_slice: each stream is ONE varint_decode
+    over the rows' concatenated bytes (a row's stream ends on a value
+    boundary, so concatenation keeps every value intact), and doc ids
+    are ONE segmented cumsum restarted at each block's first_doc.
+    Returns (postings per row, doc_ids, tfs, dls), the postings in row
+    order — identical to decode_all per row."""
+    n_blk = np.fromiter(
+        (len(b) for b in blocks), dtype=np.int64, count=len(blocks)
+    )
+    flat = [blk for row in blocks for blk in row]
+    first = np.fromiter(
+        (b["first_doc"] for b in flat), dtype=np.int64, count=len(flat)
+    )
+    sizes = np.fromiter(
+        (b["n"] for b in flat), dtype=np.int64, count=len(flat)
+    )
+    deltas = varint_decode(b"".join(doc_bytes))
+    tfs = varint_decode(b"".join(tf_bytes)).astype(np.int64)
+    dls = varint_decode(b"".join(dl_bytes)).astype(np.int64)
+    n = int(sizes.sum())
+    if not (len(deltas) == len(tfs) == len(dls) == n):
+        raise ValueError("posting streams disagree with block sizes")
+    per_row = np.bincount(
+        np.repeat(np.arange(len(blocks)), n_blk), weights=sizes,
+        minlength=len(blocks),
+    ).astype(np.int64)
+    # doc = first_doc + (inclusive cumsum - cumsum before the block),
+    # in modular uint64 like _docs_from_deltas (every block has n >= 1)
+    with np.errstate(over="ignore"):
+        cs = np.cumsum(deltas, dtype=np.uint64)
+        base = first.view(np.uint64) - (cs - deltas)[np.cumsum(sizes) - sizes]
+        doc_ids = (cs + np.repeat(base, sizes)).view(np.int64)
+    return per_row, doc_ids, tfs, dls
 
 
 def decode_block(enc_doc: bytes, enc_tf: bytes, enc_dl: bytes,

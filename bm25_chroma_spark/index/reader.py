@@ -12,7 +12,11 @@ with the same pruning as the Spark scans:
   (term, segment) and df=0 tombstones drop out;
 * corpus (SparkHybridRetriever.corpus_df): every ``gen_*.parquet``,
   rows filtered on ``doc_uid``; newest generation wins per doc_uid and
-  ``deleted`` rows drop out.
+  ``deleted`` rows drop out;
+* doc_stats (dml._live_doc_stats): the base ``doc_stats.parquet`` plus
+  every generation's ``doc_stats``, rows filtered on ``doc_id``; newest
+  generation wins per doc_id (dl=0 rows kept, the caller reads them as
+  not live).
 
 Row-group min/max statistics stand in for Spark's parquet pushdown.
 Each read is bounded: it first sums, from the footers, the
@@ -30,6 +34,11 @@ from bisect import bisect_left
 from pathlib import Path
 from typing import Dict, List, Optional, Sequence, Tuple
 
+# Largest id list a caller sends through a point read; above it the
+# callers keep their Spark joins (a broadcast ids DataFrame), and
+# apply_dml keeps its distributed path.
+MAX_POINT_IDS = 1024
+
 SHARD_COLUMNS = (
     "term", "segment", "df", "doc_bytes", "tf_bytes", "dl_bytes", "blocks",
 )
@@ -46,6 +55,12 @@ def _data_files(d: Path) -> List[Path]:
     )
 
 
+def _stat_key(v):
+    if isinstance(v, str):
+        return v.encode()
+    return v if isinstance(v, int) else bytes(v)
+
+
 class _Plan:
     """The row groups a read will decode, file by file, and the bytes
     their selected column chunks hold uncompressed."""
@@ -54,8 +69,10 @@ class _Plan:
         self.parts: List[Tuple[int, Path, object, List[int], List[str]]] = []
         self.nbytes = 0
 
-    def add(self, layer: int, path: Path, key: str, keys: List[bytes],
+    def add(self, layer: int, path: Path, key: str, keys: List,
             columns: Sequence[str]) -> None:
+        """``keys``: sorted probe keys in the statistics' domain —
+        UTF-8 bytes for a string key column, ints for a long one."""
         import pyarrow.parquet as pq
 
         with pq.ParquetFile(str(path)) as pf:
@@ -75,9 +92,7 @@ class _Plan:
                 continue
             st = rg.column(kj).statistics
             if st is not None and st.has_min_max:
-                lo, hi = st.min, st.max
-                lo = lo.encode() if isinstance(lo, str) else bytes(lo)
-                hi = hi.encode() if isinstance(hi, str) else bytes(hi)
+                lo, hi = _stat_key(st.min), _stat_key(st.max)
                 at = bisect_left(keys, lo)
                 if at == len(keys) or keys[at] > hi:
                     continue  # no key inside [min, max]
@@ -89,14 +104,14 @@ class _Plan:
         if rgs:
             self.parts.append((layer, path, md, rgs, cols))
 
-    def newest(self, key: str, keys: List[str], ident) -> Dict:
+    def newest(self, key: str, keys: List, ident) -> Dict:
         """ident(row) -> row of the newest layer holding it, over the
         rows (as dicts) whose ``key`` is in ``keys``."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        value_set = pa.array(keys, pa.string())
+        value_set = pa.array(keys)
         out: Dict = {}
         for layer, path, md, rgs, cols in self.parts:
             with pq.ParquetFile(str(path), metadata=md) as pf:
@@ -144,6 +159,34 @@ def shard_rows(
         return None
     newest = plan.newest("term", terms, lambda r: (r["term"], r["segment"]))
     return [r for r in newest.values() if r["df"] > 0]
+
+
+def doc_stats_rows(
+    base: Path, doc_ids: Sequence[int], max_bytes: int
+) -> Optional[Dict[int, int]]:
+    """doc_id -> dl of the newest doc_stats layer holding each of
+    ``doc_ids`` (base doc_stats.parquet, then every DML generation),
+    dl=0 overlay rows included: a doc absent from the result, or at
+    dl 0, is not live. None when the column chunks to decode exceed
+    ``max_bytes``."""
+    ids = sorted({int(d) for d in doc_ids})
+    if not ids:
+        return {}
+    plan = _Plan()
+    layers = [(0, base / "doc_stats.parquet")]
+    gen_root = base / "gen"
+    if gen_root.exists():
+        layers += [
+            (int(d.name.split("_")[1]), d / "doc_stats")
+            for d in sorted(gen_root.glob("gen_*"))
+        ]
+    for layer, d in layers:
+        for f in _data_files(d):
+            plan.add(layer, f, "doc_id", ids, ("doc_id", "dl"))
+    if plan.nbytes > max_bytes:
+        return None
+    newest = plan.newest("doc_id", ids, lambda r: r["doc_id"])
+    return {d: int(r["dl"]) for d, r in newest.items()}
 
 
 def corpus_rows(

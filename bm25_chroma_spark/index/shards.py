@@ -3,7 +3,7 @@ varint-compressed posting shards with per-group checkpoint manifests.
 
 Layout on disk (parquet + JSON bookkeeping):
 
-  <dir>/stats.json                 N, avgdl, config, lineage
+  <dir>/stats.json                 N, sum_dl, avgdl, config, lineage
   <dir>/doc_stats.parquet          (doc_id, dl)
   <dir>/shards/group=G/...         SHARD rows, partitioned by bucket
   <dir>/manifests/group_G.json     per-group checkpoint: status,
@@ -601,6 +601,8 @@ def build_sharded_index(
         sum_dl = int(row["sum_dl"] or 0)
         stats = {
             "n_docs": n_docs,
+            # integer Σdl: DML moves n_docs/sum_dl arithmetically
+            "sum_dl": sum_dl,
             "avgdl": (sum_dl / n_docs) if n_docs else 0.0,
             "config": asdict(config),
             "config_hash": cfg_hash,
@@ -1167,34 +1169,30 @@ def bucket_of(term: str, n_buckets: int) -> int:
 def decode_shards_to_postings(shards: DataFrame) -> DataFrame:
     """mapInPandas decode: shard rows -> (term, segment, doc_id, tf, dl).
 
-    The exhaustive query path; also the golden check for the codec at
-    scale.
+    The exhaustive query path and the distributed DML merge; also the
+    golden check for the codec at scale. Each Arrow batch decodes as
+    one slice (encode.decode_flat_slice).
     """
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from bm25_chroma_spark.index.encode import decode_all
+        from bm25_chroma_spark.index.encode import decode_flat_slice
 
         for pdf in batches:
-            frames = []
-            for r in pdf.itertuples(index=False):
-                blocks = [dict(b) for b in r.blocks]
-                d, t, l = decode_all(
-                    bytes(r.doc_bytes), bytes(r.tf_bytes), bytes(r.dl_bytes),
-                    blocks,
-                )
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "term": r.term,
-                            "segment": r.segment,
-                            "doc_id": d,
-                            "tf": t,
-                            "dl": l,
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+            if pdf.empty:
+                continue
+            per_row, d, t, l = decode_flat_slice(
+                pdf["doc_bytes"].tolist(), pdf["tf_bytes"].tolist(),
+                pdf["dl_bytes"].tolist(), pdf["blocks"].tolist(),
+            )
+            yield pd.DataFrame(
+                {
+                    "term": np.repeat(pdf["term"].to_numpy(), per_row),
+                    "segment": np.repeat(pdf["segment"].to_numpy(), per_row),
+                    "doc_id": d,
+                    "tf": t,
+                    "dl": l,
+                }
+            )
 
     return shards.mapInPandas(
         gen, schema="term string, segment int, doc_id long, tf long, dl long"

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bm25_chroma_spark.config import BM25Config
+from bm25_chroma_spark.index import reader
 from bm25_chroma_spark.index.dml import apply_dml
 from bm25_chroma_spark.index.shards import ShardedIndex, build_sharded_index
 from bm25_chroma_spark.index.wand import search_sharded, search_sharded_rows
@@ -479,18 +480,26 @@ class SparkHybridRetriever:
 
         # old versions of re-added ids: their stored text defines the
         # affected terms of the implicit remove (reference re-tokenizes
-        # chunk_texts on removal, bm25.py:238-249). Snapshot to parquet
-        # BEFORE the new generation lands — a persist() could be
-        # evicted and lazily recompute over the mutated corpus.
+        # chunk_texts on removal, bm25.py:238-249). Read BEFORE the new
+        # generation lands: point-read into a local relation up to the
+        # reader's bounds, else snapshotted to parquet — a persist()
+        # could be evicted and lazily recompute over the mutated corpus.
         old_versions = None
         if self._index is not None:
-            prior = self._filter_by_ids(self.corpus_df(), doc_ids).select(
-                self._id_expr(F.col("doc_uid")).alias("doc_id"), "text"
-            )
-            if not prior.isEmpty():
-                snap = self.state / "tmp" / "old_versions.parquet"
-                prior.write.mode("overwrite").parquet(str(snap))
-                old_versions = self.spark.read.parquet(str(snap))
+            rows = self._live_rows(doc_ids)
+            if rows is not None:
+                if len(rows):
+                    old_versions = self._local_docs(rows)
+            else:
+                prior = self._filter_by_ids(
+                    self.corpus_df(), doc_ids
+                ).select(
+                    self._id_expr(F.col("doc_uid")).alias("doc_id"), "text"
+                )
+                if not prior.isEmpty():
+                    snap = self.state / "tmp" / "old_versions.parquet"
+                    prior.write.mode("overwrite").parquet(str(snap))
+                    old_versions = self.spark.read.parquet(str(snap))
 
         import json as _json
 
@@ -705,11 +714,27 @@ class SparkHybridRetriever:
         self.remove_documents_batch([doc_id])
 
     def remove_documents_batch(self, doc_ids: List[str]) -> None:
-        """Victims never leave the cluster: the matched rows are
-        written straight to the tombstone generation, which is then
-        read back (a pinned snapshot) to drive the index DML — no
-        driver-side row list, so bulk deletes scale."""
-        self._remove_victims(self._filter_by_ids(self.corpus_df(), doc_ids))
+        """Up to reader.MAX_POINT_IDS ids resolve through a driver-side
+        point read of the corpus (index/reader.py) and reach the index
+        DML as a local relation, so a small remove writes its tombstone
+        generation in one Spark job and merges the index on the driver.
+        Above that bound (or the reader's byte budget) victims never
+        leave the cluster: the matched rows are written straight to the
+        tombstone generation, which is then read back (a pinned
+        snapshot) to drive the index DML — no driver-side row list, so
+        bulk deletes scale."""
+        rows = self._live_rows(doc_ids)
+        if rows is None:
+            self._remove_victims(
+                self._filter_by_ids(self.corpus_df(), doc_ids)
+            )
+        elif len(rows):  # unknown ids no-op (reference bm25.py:229-230)
+            self._remove_victims(
+                self.spark.createDataFrame(
+                    rows, "doc_uid string, text string, meta_json string"
+                ),
+                self._local_docs(rows),
+            )
 
     def remove_documents_df(self, ids: DataFrame) -> None:
         """DataFrame-native bulk delete: ``ids`` carries a doc_uid
@@ -723,16 +748,61 @@ class SparkHybridRetriever:
             )
         )
 
-    def _remove_victims(self, victims: DataFrame) -> None:
-        if victims.isEmpty():
+    def _live_rows(self, doc_ids: Sequence[str]) -> Optional[pd.DataFrame]:
+        """(doc_uid, text, meta_json) of the live ones among
+        ``doc_ids``, point-read on the driver; None above
+        reader.MAX_POINT_IDS ids or the reader's byte budget (the
+        caller then keeps its Spark join)."""
+        if len(set(doc_ids)) > reader.MAX_POINT_IDS:
+            return None
+        got = reader.corpus_rows(
+            self.state / "corpus", doc_ids, self._reader_budget()
+        )
+        if got is None:
+            return None
+        uids = sorted(got)
+        return pd.DataFrame(
+            {
+                "doc_uid": pd.Series(uids, dtype=object),
+                "text": pd.Series([got[u][0] for u in uids], dtype=object),
+                "meta_json": pd.Series(
+                    [got[u][1] for u in uids], dtype=object
+                ),
+            }
+        )
+
+    def _local_docs(self, rows: pd.DataFrame) -> DataFrame:
+        """(doc_id, text) of driver-held corpus rows as a local
+        relation: apply_dml collects it without a Spark job."""
+        return self.spark.createDataFrame(
+            rows[["doc_uid", "text"]], "doc_uid string, text string"
+        ).select(self._id_expr(F.col("doc_uid")).alias("doc_id"), "text")
+
+    def _reader_budget(self) -> int:
+        return (
+            self._index.postings_cache_bytes
+            if self._index is not None
+            else ShardedIndex.postings_cache_bytes
+        )
+
+    def _remove_victims(
+        self, victims: DataFrame, local: Optional[DataFrame] = None
+    ) -> None:
+        """Write the tombstone generation of ``victims`` (live corpus
+        rows), then hard-delete them from the index: from ``local``
+        (doc_id, text) when the caller holds them on the driver, else
+        from the written generation read back."""
+        if local is None and victims.isEmpty():
             return  # unknown ids no-op (reference bm25.py:229-230)
         gen_path = self._next_gen("corpus")
         victims.withColumn("deleted", F.lit(True)).write.mode(
             "overwrite"
         ).parquet(str(gen_path))
-        delete_df = self.spark.read.parquet(str(gen_path)).select(
-            self._id_expr(F.col("doc_uid")).alias("doc_id"), "text"
-        )
+        delete_df = local
+        if delete_df is None:
+            delete_df = self.spark.read.parquet(str(gen_path)).select(
+                self._id_expr(F.col("doc_uid")).alias("doc_id"), "text"
+            )
         apply_dml(
             self.spark, str(self.state / "index"), delete_docs=delete_df
         )
@@ -974,7 +1044,7 @@ class SparkHybridRetriever:
                 found = self._vec_cache.uids_of(missing)
                 missing = [d for d in missing if d not in found]
             if missing:
-                if len(missing) <= 1024:
+                if len(missing) <= reader.MAX_POINT_IDS:
                     fetched = self._uid_map().filter(
                         F.col("doc_id").isin([int(x) for x in missing])
                     )
@@ -999,15 +1069,13 @@ class SparkHybridRetriever:
         self, uids: List[str]
     ) -> Tuple[Dict[str, str], Dict[str, Dict]]:
         """(texts, metas) for result uids through the bounded warm doc
-        LRU: a warm repeat skips the corpus entirely. Up to 1024
+        LRU: a warm repeat skips the corpus entirely. Up to reader.MAX_POINT_IDS
         misses are read driver-side by the parquet reader
         (index/reader.py: the corpus_df overlay, zero Spark jobs)
         while their column chunks fit the index's postings_cache_bytes;
         above either bound they are fetched by a Spark projection.
         Fetched rows are cached."""
         import json as _json
-
-        from bm25_chroma_spark.index.reader import corpus_rows
 
         texts: Dict[str, str] = {}
         metas: Dict[str, Dict] = {}
@@ -1023,19 +1091,16 @@ class SparkHybridRetriever:
                 missing.append(u)
         if missing:
             got = None
-            if len(missing) <= 1024:
-                budget = (
-                    self._index.postings_cache_bytes
-                    if self._index is not None
-                    else ShardedIndex.postings_cache_bytes
+            if len(missing) <= reader.MAX_POINT_IDS:
+                got = reader.corpus_rows(
+                    self.state / "corpus", missing, self._reader_budget()
                 )
-                got = corpus_rows(self.state / "corpus", missing, budget)
             if got is None:
                 # interactive-sized sets push isin into the parquet
                 # scan; above that a broadcast-joined ids DataFrame (a
                 # 1k-query batched query() can carry 50k result uids —
                 # a giant isin literal tree is the r4 anti-pattern)
-                if len(missing) <= 1024:
+                if len(missing) <= reader.MAX_POINT_IDS:
                     fetched = self.corpus_df().filter(
                         F.col("doc_uid").isin(missing)
                     )
@@ -1227,7 +1292,7 @@ class SparkHybridRetriever:
                     if u in vcache.by_uid
                 }
             else:
-                if len(all_uids) <= 1024:
+                if len(all_uids) <= reader.MAX_POINT_IDS:
                     vfetched = self.vectors_df().filter(
                         F.col("doc_uid").isin(all_uids)
                     )

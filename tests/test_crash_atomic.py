@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from bm25_chroma_spark.config import BM25Config
 from bm25_chroma_spark.index import dml as dml_mod
+from bm25_chroma_spark.index import reader
 from bm25_chroma_spark.index.dml import apply_dml, compact_index
 from bm25_chroma_spark.index.shards import ShardedIndex, build_sharded_index
 from bm25_chroma_spark.index.wand import search_sharded
@@ -81,14 +82,25 @@ def _dml_delete(spark, idx_dir: str, doc_id: int, text: str):
 # apply_dml generation commit                                         #
 # ------------------------------------------------------------------ #
 
+DML_PATHS = ["driver", "distributed"]
 
+
+def _force_path(path: str, monkeypatch) -> None:
+    """A one-doc batch takes apply_dml's driver path; an id bound of 0
+    sends it to the distributed path."""
+    if path == "distributed":
+        monkeypatch.setattr(reader, "MAX_POINT_IDS", 0)
+
+
+@pytest.mark.parametrize("path", DML_PATHS)
 def test_dml_crash_before_rename_loses_batch_not_index(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, path
 ):
     """Crash before the commit rename: the batch is lost, the index is
     untouched and consistent; a retry applies the batch cleanly."""
     idx_dir = _build(spark, str(tmp_path / "idx"))
     before = _results(spark, idx_dir)
+    _force_path(path, monkeypatch)
 
     real_rename = Path.rename
 
@@ -101,6 +113,7 @@ def test_dml_crash_before_rename_loses_batch_not_index(
     with pytest.raises(RuntimeError, match="injected"):
         _dml_delete(spark, idx_dir, 1, DOCS[0][1])
     monkeypatch.undo()
+    _force_path(path, monkeypatch)
 
     # reopen: nothing changed, no torn generation visible
     assert _results(spark, idx_dir) == before
@@ -112,13 +125,16 @@ def test_dml_crash_before_rename_loses_batch_not_index(
     assert all(d != 1 for _, _, d, _ in after)
 
 
+@pytest.mark.parametrize("path", DML_PATHS)
 def test_dml_crash_after_rename_recovers_stats(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, path
 ):
     """Crash between the gen rename and the stats write: the batch IS
-    committed; recover_index reconciles stats.json on next open."""
+    committed; recover_index reconciles stats.json (n_docs, sum_dl,
+    avgdl) on next open."""
     idx_dir = _build(spark, str(tmp_path / "idx"))
     stats0 = json.loads((Path(idx_dir) / "stats.json").read_text())
+    _force_path(path, monkeypatch)
 
     def boom(base, stats):
         raise RuntimeError("injected crash before stats write")
@@ -137,6 +153,10 @@ def test_dml_crash_after_rename_recovers_stats(
     idx = ShardedIndex(spark, idx_dir)
     assert idx.generation == 1
     assert idx.n_docs == stats0["n_docs"] - 1
+    healed = json.loads((Path(idx_dir) / "stats.json").read_text())
+    dl1 = len(DOCS[0][1].split())
+    assert healed["sum_dl"] == stats0["sum_dl"] - dl1
+    assert healed["avgdl"] == healed["sum_dl"] / healed["n_docs"]
     after = _results(spark, idx_dir)
     assert all(d != 1 for _, _, d, _ in after)
 

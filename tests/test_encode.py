@@ -11,6 +11,7 @@ from bm25_chroma_spark.index.encode import (
     block_upper_bound,
     decode_all,
     decode_block,
+    decode_flat_slice,
     encode_postings,
     varint_decode,
     varint_encode,
@@ -36,6 +37,22 @@ def test_varint_boundaries():
              2**28, 2**35, 2**42, 2**49, 2**56, 2**63 - 1]
     buf, _ = varint_encode(np.array(edges, dtype=np.uint64))
     assert varint_decode(buf).tolist() == edges
+
+
+def test_varint_decode_long_stream_in_chunks():
+    """A stream longer than one decode pass (_DECODE_CHUNK bytes) is
+    cut at value boundaries; every value still round-trips, whatever
+    its byte length."""
+    from bm25_chroma_spark.index import encode
+
+    rng = np.random.default_rng(3)
+    bits = rng.integers(0, 64, size=40_000).astype(np.uint64)
+    values = rng.integers(0, 2**63, size=40_000, dtype=np.uint64) >> (
+        np.uint64(63) - np.minimum(bits, np.uint64(63))
+    )
+    buf, _ = varint_encode(values)
+    assert len(buf) > 4 * encode._DECODE_CHUNK
+    np.testing.assert_array_equal(varint_decode(buf), values)
 
 
 @given(
@@ -107,6 +124,42 @@ def test_full_range_doc_ids():
         )
         np.testing.assert_array_equal(d, doc_ids)
         np.testing.assert_array_equal(t, tfs)
+
+
+@settings(deadline=None, max_examples=40)
+@given(st.integers(0, 2**32), st.sampled_from([1, 3, 8, 128]))
+def test_decode_flat_slice_matches_per_row(seed, block_size):
+    """The whole-slice decoder returns exactly the per-row decode_all
+    arrays, concatenated in row order, with the right per-row counts —
+    over full-range (negative, xxhash64-style) ids, multi-block rows
+    and empty rows (no bytes, no blocks)."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for _ in range(int(rng.integers(0, 12))):
+        n = int(rng.choice([0, 1, int(rng.integers(2, 3 * block_size + 2))]))
+        ids = np.unique(
+            rng.integers(-(2**63), 2**63 - 1, size=n, dtype=np.int64)
+        )
+        enc = encode_postings(
+            ids, rng.integers(1, 300, size=len(ids)),
+            rng.integers(1, 5000, size=len(ids)), block_size=block_size,
+        )
+        rows.append(enc)
+    per_row, d, t, l = decode_flat_slice(
+        [e.doc_bytes for e in rows], [e.tf_bytes for e in rows],
+        [e.dl_bytes for e in rows], [e.blocks for e in rows],
+    )
+    want = [
+        decode_all(e.doc_bytes, e.tf_bytes, e.dl_bytes, e.blocks)
+        for e in rows
+    ]
+    assert per_row.tolist() == [e.count for e in rows]
+    for got, k in ((d, 0), (t, 1), (l, 2)):
+        exp = np.concatenate(
+            [w[k] for w in want] + [np.zeros(0, dtype=np.int64)]
+        )
+        assert got.dtype == np.int64
+        np.testing.assert_array_equal(got, exp)
 
 
 def _ref_merge_encode(pdf, block_size):

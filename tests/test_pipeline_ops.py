@@ -625,3 +625,48 @@ def test_ngram_stats_null_and_edge_parity(spark):
     assert got[5] == (2, 1, 1.0, 0.5, 2)
     # blank docs: n=1 dup count is 0, not null
     assert got[1][4] == 0 and got[3][4] == 0
+
+
+def test_gram_stats_totals_match_jvm_word_ngrams_unicode(spark):
+    """The vectorized n-gram stats re-implement _words in Python, so
+    their gram totals must equal F.size(word_ngrams(...)) exactly, on
+    random text mixing U+0130, sharp s, combining marks, final sigma and
+    ligatures with ASCII whitespace, NBSP, and the line terminators
+    Java's ``$`` honors (NEL, U+2028, U+2029, CR LF)."""
+    import pandas as pd
+
+    from bm25_chroma_spark.functions.text_analysis import _gram_stats_batch
+
+    rng = random.Random(11)
+    letters = ["a", "Z", "\u0130", "\u00df", "\u1e9e", "e\u0301",
+               "i\u0307", "\u03a3", "\u03c2", "\u01c5", "\u212a",
+               "\u00c5", "\ufb01", "7"]
+    spaces = [" ", "  ", "\t", "\n", "\r", "\r\n", "\x0b", "\x0c",
+              "\u00a0", "\u0085", "\u2028", "\u2029", "\u3000"]
+    texts = ["", "\u2028", "a b \u2028", "\u2028 \u2028", " \u0085",
+             "a \r\n", "\u2029\n", "x y z\u2028"]
+    for _ in range(500):
+        parts = [rng.choice(spaces)] if rng.random() < 0.3 else []
+        for _ in range(rng.randint(0, 7)):
+            parts.append(
+                "".join(rng.choice(letters) for _ in range(rng.randint(1, 3)))
+            )
+            if rng.random() < 0.7:
+                parts.append(rng.choice(spaces))
+        texts.append("".join(parts))
+    df = spark.createDataFrame(
+        pd.DataFrame({"i": range(len(texts)), "text": texts}),
+        "i long, text string",
+    )
+    for n in (1, 2, 3):
+        want = [
+            r[0] for r in df.orderBy("i").select(
+                F.size(word_ngrams(F.col("text"), n))
+            ).collect()
+        ]
+        total = _gram_stats_batch(pd.Series(texts, dtype=object), n)[0]
+        bad = [
+            (texts[j], want[j], int(total[j]))
+            for j in range(len(texts)) if want[j] != total[j]
+        ]
+        assert not bad, (n, bad[:5])

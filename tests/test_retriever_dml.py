@@ -572,3 +572,57 @@ def test_query_df_dataframe_input_and_bm25_only(spark, tmp_path):
         by_q.setdefault(row["query_id"], []).append(row["doc_uid"])
     assert by_q[100] == ref["ids"][0]
     assert by_q[200] == ref["ids"][1]
+
+
+def test_small_list_writes_skip_spark_joins(spark, tmp_path, jobs,
+                                            monkeypatch):
+    """A 20-doc add (10 new ids, 10 re-adds) and a 10-doc remove (one
+    unknown id) on a loaded state resolve their prior versions through
+    the driver-side corpus reader and merge the index on the driver:
+    each launches at most 3 Spark jobs (the corpus and vector
+    generation writes), the same count in three consecutive
+    generations, and leaves the same results as a handle forced onto
+    the Spark joins and the distributed DML path."""
+    import time
+
+    from bm25_chroma_spark.index import reader
+
+    def text(i, g):
+        return f"doc {i} common{i % 5} rare{i % 17} gen{g} word{(i * g) % 7}"
+
+    fast = SparkHybridRetriever(spark, str(tmp_path / "fast"))
+    slow = SparkHybridRetriever(spark, str(tmp_path / "slow"))
+    base = [f"u{i}" for i in range(60)]
+    for r in (fast, slow):
+        r.add_documents_batch([text(i, 0) for i in range(60)], base)
+    counts, secs = [], []
+    queries = ["common1 rare3", "gen2 word4 doc", "rare16 common0 gen1"]
+    for g in range(1, 4):
+        ids = [f"u{i}" for i in range(20 * g, 20 * g + 10)] + [
+            f"new{g}_{i}" for i in range(10)
+        ]
+        docs = [text(i, g) for i in range(20)]
+        victims = [f"u{i}" for i in range(g, 60, 7)][:9] + ["unknown"]
+        jobs.mark()
+        t0 = time.perf_counter()
+        fast.add_documents_batch(docs, ids)
+        counts.append(("add", jobs.since()))
+        secs.append(time.perf_counter() - t0)
+        jobs.mark()
+        t0 = time.perf_counter()
+        fast.remove_documents_batch(victims)
+        counts.append(("remove", jobs.since()))
+        secs.append(time.perf_counter() - t0)
+        with monkeypatch.context() as m:
+            m.setattr(reader, "MAX_POINT_IDS", 0)
+            slow.add_documents_batch(docs, ids)
+            slow.remove_documents_batch(victims)
+        assert fast._index.generation == slow._index.generation == 2 * g
+        assert fast.get_system_stats() == slow.get_system_stats()
+        assert fast.query(queries, n_results=8) == slow.query(
+            queries, n_results=8
+        )
+    print("list-write seconds (add, remove per generation):", secs)
+    assert all(n <= 3 for _, n in counts), counts
+    assert len({n for k, n in counts if k == "add"}) == 1, counts
+    assert len({n for k, n in counts if k == "remove"}) == 1, counts
