@@ -8,8 +8,8 @@ Layers:
   operators/  index build, BM25 scoring, top-k, RRF fusion, KNN,
               dedup, DML lifecycle
   index/      physical shard encoding (delta+varint+block-max),
-              segment merge, checkpoint manifests, WAND query path
-  sources/    synthetic corpus generator, catalog IO, multimodal
+              segment merge, checkpoint manifests, BM25 query path
+  sources/    synthetic corpus generator, catalog IO
   plans/      HybridRetriever facade (Chroma-compatible query())
   streaming/  incremental ingest via Structured Streaming
 """

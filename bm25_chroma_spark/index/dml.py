@@ -489,7 +489,7 @@ def _distributed_batch(spark, index, upserts, delete_docs, tmp_dir) -> int:
 
     # segment assignment MUST match the base build's hash_segment —
     # one segment function across the index's life, or per-segment
-    # WAND sees the same doc in two segments with split scores
+    # scoring sees the same doc in two segments with split scores
     salt = cfg.salt_factor
 
     @F.pandas_udf(IntegerType())

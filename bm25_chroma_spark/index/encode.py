@@ -19,6 +19,8 @@ Block-max bound: BM25-with-Solr-norm is monotone increasing in tf and
 decreasing in dl, so idf * f(max_tf, min_dl) upper-bounds every
 posting in the block for ANY (N, avgdl) — the bound survives segment
 merges and corpus growth, unlike storing a precomputed max score.
+The query kernel (index/wand.py) scores whole lists and reads no
+bound today; the metadata stays so block skipping needs no rebuild.
 """
 
 from __future__ import annotations
@@ -217,23 +219,3 @@ def decode_flat_slice(
         base = first.view(np.uint64) - (cs - deltas)[np.cumsum(sizes) - sizes]
         doc_ids = (cs + np.repeat(base, sizes)).view(np.int64)
     return per_row, doc_ids, tfs, dls
-
-
-def decode_block(enc_doc: bytes, enc_tf: bytes, enc_dl: bytes,
-                 blk: dict, next_offs: Tuple[int, int, int]
-                 ) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode a single block independently (for WAND skipping)."""
-    d_end, t_end, l_end = next_offs
-    deltas = varint_decode(enc_doc[blk["doc_off"]:d_end])
-    tfs = varint_decode(enc_tf[blk["tf_off"]:t_end]).astype(np.int64)
-    dls = varint_decode(enc_dl[blk["dl_off"]:l_end]).astype(np.int64)
-    return _docs_from_deltas(blk["first_doc"], deltas), tfs, dls
-
-
-def block_upper_bound(max_tf: float, min_dl: float, idf: float,
-                      k1: float, b: float, avgdl: float) -> float:
-    """idf * f(max_tf, min_dl): valid upper bound on any posting's
-    BM25-with-Solr-norm contribution in the block (monotone in tf up,
-    dl down)."""
-    denom = max_tf + k1 * (1.0 - b + b * min_dl / avgdl)
-    return idf * (max_tf * (k1 + 1.0)) / denom / np.sqrt(min_dl)

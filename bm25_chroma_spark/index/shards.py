@@ -20,7 +20,7 @@ Layout on disk (parquet + JSON bookkeeping):
 Shard row = one (term, segment): segment = hash_segment(doc_id) — a
 splitmix-style mix of doc_id mod S (the SAME function on the build and
 DML paths; segments must stay a consistent partition of the doc space
-or per-segment WAND would emit split partial scores). It
+or per-segment scoring would emit split partial scores). It
 splits every hot term's postings across S groups, so no single
 aggregation group ever exceeds ~1/S of the hottest term — the
 explicit skew handling the vanilla groupBy(term) lacks. Segments are
@@ -115,14 +115,13 @@ def _map_docs_to_partials(
 
     ``pretokenized``: the input 'text' column already holds token
     ARRAYS (e.g. produced JVM-side by functions.tokenizer.sql_tokens).
-    Measured r6 (scripts/proto_tokenize_jvm.py, BENCH/r6_notes.md #4):
-    the JVM regex alone is ~4x cheaper than the per-doc Python call,
-    but shipping the token arrays through the task-local Arrow
-    transfer erases the win — the hybrid ties the pure-Python pass —
-    so the build keeps the single-Python-stage default (which also
-    keeps Python \\b unicode semantics). The parameter stays for the
-    prototype harness and for callers that already HAVE tokenized
-    arrays.
+    Measured r6 (BENCH/r6_notes.md #4): the JVM regex alone is ~4x
+    cheaper than the per-doc Python call, but shipping the token
+    arrays through the task-local Arrow transfer erases the win — the
+    hybrid ties the pure-Python pass — so the build keeps the
+    single-Python-stage default (which also keeps Python \\b unicode
+    semantics). The parameter stays for callers that already HAVE
+    tokenized arrays.
 
     Sentinel rows (bucket = -1, term = '') carry each batch's
     (doc_ids, dls) arrays so doc stats come out of the same pass —
@@ -939,13 +938,13 @@ class ShardedIndex:
     # window ≈ 1.2-2.0 s at sf0.1) where the reference answers from an
     # in-memory dict. The classic search-engine answer is a bounded
     # hot-term cache: keep the COMPRESSED posting rows of recently
-    # queried terms on the driver and run the exact Block-Max WAND
-    # DAAT loop locally (index/wand.py _run_local_daat) — identical
-    # results (WAND is rank-safe exact, and the local path shares the
-    # cursors/heap verbatim), zero Spark jobs when warm, and zero on a
-    # miss too while the driver-side reader (index/reader.py) can
-    # serve it: postings_cache_bytes also bounds the column chunks
-    # the reader may decode, above which a miss is one Spark collect.
+    # queried terms on the driver and run the scoring kernel locally
+    # (index/wand.py _run_local) — identical results (the distributed
+    # plan runs the same kernel per segment), zero Spark jobs when
+    # warm, and zero on a miss too while the driver-side reader
+    # (index/reader.py) can serve it: postings_cache_bytes also
+    # bounds the column chunks the reader may decode, above which a
+    # miss is one Spark collect.
     # A term whose rows exceed the whole budget is fetched and served
     # ONCE, then cached as a too-big marker that postings_cacheable()
     # reads to keep it off the driver path while the generation holds
@@ -958,9 +957,9 @@ class ShardedIndex:
     def postings_cacheable(self, terms: List[str]) -> bool:
         """False when any term carries a current-generation too-big
         marker (its rows exceeded postings_cache_bytes on a prior
-        fetch). The local-DAAT gate checks this BEFORE committing to
-        the driver path, so hot oversized terms stay distributed
-        instead of paying a driver collect on every query."""
+        fetch). The driver-path gate checks this BEFORE committing to
+        it, so hot oversized terms stay distributed instead of paying
+        a driver collect on every query."""
         gen = self.generation
         for t in terms:
             hit = self._postings_cache.get(t)
@@ -1136,7 +1135,7 @@ class ShardedIndex:
 
 class _CachedShardRow:
     """Plain driver-side shard row; attribute layout matches what
-    index/wand.py's _Cursor reads off Arrow itertuples rows."""
+    index/wand.py's _score_topk reads off Arrow itertuples rows."""
 
     __slots__ = (
         "term", "segment", "df", "doc_bytes", "tf_bytes", "dl_bytes",

@@ -271,12 +271,12 @@ class SparkHybridRetriever:
         (default max(2, n_cells//4)) to trade recall for scan cost.
 
         bm25_strategy: strategy passed to search_sharded by the BM25
-        leg — 'auto' (default) routes each query per its df profile
-        through exhaustive or Block-Max WAND (index/wand.py
-        _wand_vote_qids; the vote reads per-term dfs driver-side,
-        cached per index state), matching whichever engine measures faster
-        for that query's term statistics. Both engines are exact, so
-        results are identical; set 'exhaustive' or 'wand' to pin one.
+        leg — 'auto' (default) scores a batch on the driver with no
+        Spark job when its postings fit the driver bound
+        (index/wand.py CACHE_MAX_QUERY_POSTINGS and the postings LRU)
+        and runs the distributed plan otherwise; 'exhaustive' (or its
+        alias 'wand') always runs the distributed plan. Both places
+        run the same kernel, so results and scores are identical.
 
         The default config is LOSSLESS (no posting caps): the
         retriever's index is the sharded path, whose query guard

@@ -65,8 +65,9 @@ def main() -> None:
     sections = []
     q = [(1, "spark join hash"), (2, "window agg group sort")]
     sections.append((
-        "Sharded BM25 search (exhaustive, r9 vectorized): bucket-"
-        "pruned shard scan x broadcast(query groups) -> grouped "
+        "Sharded BM25 search (strategy exhaustive or wand, r9 "
+        "vectorized): bucket-pruned shard scan x broadcast(query "
+        "groups) -> grouped "
         "applyInPandas per (segment, qgroup) scoring whole posting "
         "lists in numpy (posting BYTES shuffle once per segment per "
         "query-group; per-term df collected driver-side, no second "
@@ -74,14 +75,6 @@ def main() -> None:
         "Measured: 1M-doc 32-query batch 70.6s -> 1.9s vs the old "
         "decode-join-agg shape",
         explain_str(search_sharded(idx, q, top_k=10)),
-    ))
-
-    sections.append((
-        "Block-Max WAND: same physical layout; the grouped UDF runs "
-        "the seeded-floor Python DAAT for queries whose bounds can "
-        "discriminate and the shared vectorized scorer for the rest. "
-        "r9 measured: wand_1m strategy=wand 21.6s -> ~1.5-2s",
-        explain_str(search_sharded(idx, q, top_k=10, strategy="wand")),
     ))
 
     lidx = build_logical_index(docs, id_col="doc_id", text_col="text")

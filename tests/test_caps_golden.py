@@ -132,7 +132,7 @@ def test_sharded_build_cap_rank_identical_to_reference(
     )
     assert df_hot == 5
 
-    for strategy in ("exhaustive", "wand"):
+    for strategy in ("exhaustive", "auto"):
         got = {
             r["doc_id"]: r["score"]
             for r in search_sharded(

@@ -424,6 +424,34 @@ def test_facade_bm25_auto_matches_exhaustive(spark, tmp_path):
     assert qres_a["distances"] == qres_e["distances"]
 
 
+def test_top_k_zero_and_negative_on_every_path(retriever):
+    """top_k == 0 returns no rows on the driver path and the
+    distributed plan alike, and through the facade; top_k < 0 is
+    refused. (The retired driver DAAT read the top of an empty heap at
+    top_k == 0 and raised IndexError, as did any negative top_k.)"""
+    from bm25_chroma_spark.index.wand import (
+        search_sharded,
+        search_sharded_rows,
+    )
+
+    retriever.add_documents_batch(
+        ["alpha beta gamma", "beta gamma", "gamma delta"], ["a", "b", "c"]
+    )
+    idx = retriever._index
+    for strategy in ("exhaustive", "wand", "auto"):
+        q = [(0, "beta gamma")]
+        assert search_sharded_rows(idx, q, top_k=0, strategy=strategy) == []
+        assert search_sharded(
+            idx, q, top_k=0, strategy=strategy
+        ).collect() == []
+        rows = search_sharded_rows(idx, q, top_k=5, strategy=strategy)
+        assert len(rows) == 3
+        with pytest.raises(ValueError):
+            search_sharded_rows(idx, q, top_k=-1, strategy=strategy)
+    res = retriever.query(["beta gamma"], n_results=0)
+    assert res["ids"] == [[]]
+
+
 def test_corpus_single_gen_fast_path(retriever):
     """With exactly one corpus generation (fresh build / post-compact
     state) corpus_df must skip the newest-wins overlay entirely — no

@@ -1,9 +1,9 @@
-"""Physical sharded index: build, prune, decode, resume, WAND parity.
+"""Physical sharded index: build, prune, decode, resume, engine parity.
 
-The pruning-equivalence property (SURVEY.md §5.4): block-max WAND
-top-k must equal the exhaustive scorer's top-k, which in turn must
-equal the logical (array) path — which the golden suite already ties
-to the reference engine.
+Engine equality: the driver path ('auto') returns exactly the
+distributed plan's rows and scores ('exhaustive', 'wand'), which in
+turn equal the logical (array) path — which the golden suite already
+ties to the reference engine.
 """
 
 from __future__ import annotations
@@ -22,7 +22,7 @@ from bm25_chroma_spark.index.shards import (
     bucket_of,
     decode_shards_to_postings,
 )
-from bm25_chroma_spark.index.wand import search_sharded
+from bm25_chroma_spark.index.wand import search_sharded, search_sharded_rows
 from bm25_chroma_spark.operators.index_build import build_logical_index
 from bm25_chroma_spark.operators.scoring import bm25_score_queries
 from bm25_chroma_spark.sources.corpus import (
@@ -124,16 +124,53 @@ def test_exhaustive_matches_logical_scorer(
         assert math.isclose(w[k][1], g[k][1], rel_tol=1e-9), k
 
 
-def test_wand_matches_exhaustive(spark, shard_dir, queries_df):
-    idx = ShardedIndex(spark, shard_dir)
-    ex = search_sharded(idx, queries_df, top_k=20, strategy="exhaustive")
-    wd = search_sharded(idx, queries_df, top_k=20, strategy="wand")
-    e = {(r["query_id"], r["rank"]): (r["doc_id"], r["score"]) for r in ex.collect()}
-    w = {(r["query_id"], r["rank"]): (r["doc_id"], r["score"]) for r in wd.collect()}
-    assert set(e) == set(w)
-    for k in e:
-        assert e[k][0] == w[k][0], (k, e[k], w[k])
-        assert math.isclose(e[k][1], w[k][1], rel_tol=1e-9), k
+def _by_rank(rows):
+    """(query_id, rank) -> (doc_id, score) of search rows or tuples."""
+    return {(r[0], r[3]): (r[1], r[2]) for r in map(tuple, rows)}
+
+
+def _assert_engines_equal(spark, idx, top_k, jobs, docs):
+    """'auto' scores on the driver with zero Spark jobs; 'exhaustive'
+    and 'wand' run the distributed plan. The one kernel sums each
+    doc's terms in the same order in both places, so ranks, doc ids
+    AND scores are equal exactly — with and without score_round. All
+    of them equal the logical scorer over ``docs`` (the live corpus):
+    ranks exactly, scores to rel_tol."""
+    qpairs = reference_query_set()
+    logical = build_logical_index(docs, config=CFG)
+    qdf = spark.createDataFrame(qpairs, "query_id long, query_text string")
+    for score_round in (None, 2):
+        ex = _by_rank(search_sharded(
+            idx, qpairs, top_k=top_k, strategy="exhaustive",
+            score_round=score_round,
+        ).collect())
+        assert ex
+        wd = search_sharded(
+            idx, qpairs, top_k=top_k, strategy="wand",
+            score_round=score_round,
+        ).collect()
+        assert _by_rank(wd) == ex
+        jobs.mark()
+        au = search_sharded_rows(
+            idx, qpairs, top_k=top_k, strategy="auto",
+            score_round=score_round,
+        )
+        assert jobs.since() == 0  # served by the driver path
+        assert _by_rank(au) == ex
+        want = _by_rank(bm25_score_queries(
+            qdf, logical, top_k=top_k, score_round=score_round
+        ).collect())
+        assert set(want) == set(ex)
+        for k in want:
+            assert want[k][0] == ex[k][0], (score_round, k)
+            assert math.isclose(want[k][1], ex[k][1], rel_tol=1e-9), k
+    return ex
+
+
+def test_wand_matches_exhaustive(spark, docs_df, shard_dir, jobs):
+    _assert_engines_equal(
+        spark, ShardedIndex(spark, shard_dir), 20, jobs, docs_df
+    )
 
 
 def test_hash_segment_np_matches_python():
@@ -154,14 +191,12 @@ def test_hash_segment_np_matches_python():
 
 
 def test_wand_matches_exhaustive_after_dml(
-    spark, docs_df, queries_df, tmp_path_factory
+    spark, docs_df, tmp_path_factory, jobs
 ):
     """Regression: DML re-encode must assign segments with the SAME
-    hash as the base build, or per-segment WAND emits duplicate
+    hash as the base build, or the per-segment plan emits duplicate
     doc_ids with split partial scores (round-1 advisor repro:
     exhaustive 25 rows vs wand 28)."""
-    import math as _m
-
     from bm25_chroma_spark.index.dml import apply_dml
 
     out = str(tmp_path_factory.mktemp("index") / "dml_wand_v1")
@@ -183,23 +218,14 @@ def test_wand_matches_exhaustive_after_dml(
     apply_dml(spark, out, upserts=new, delete_docs=old)
 
     idx = ShardedIndex(spark, out)
-    ex = search_sharded(idx, queries_df, top_k=25, strategy="exhaustive")
-    wd = search_sharded(idx, queries_df, top_k=25, strategy="wand")
-    e = {
-        (r["query_id"], r["rank"]): (r["doc_id"], r["score"])
-        for r in ex.collect()
-    }
-    w = {
-        (r["query_id"], r["rank"]): (r["doc_id"], r["score"])
-        for r in wd.collect()
-    }
-    assert set(e) == set(w)
-    for k in e:
-        assert e[k][0] == w[k][0], (k, e[k], w[k])
-        assert _m.isclose(e[k][1], w[k][1], rel_tol=1e-9), k
-    # no duplicate doc per query in the WAND result
-    for qid in {q for q, _ in w}:
-        docs = [d for (q, _), (d, _) in w.items() if q == qid]
+    live = docs_df.join(old.select("doc_id"), "doc_id", "left_anti")
+    got = _assert_engines_equal(
+        spark, idx, 25, jobs, live.unionByName(new)
+    )
+    # no duplicate doc per query (per-segment top-k unions stay
+    # disjoint only while DML keeps the base build's segment hash)
+    for qid in {q for q, _ in got}:
+        docs = [d for (q, _), (d, _) in got.items() if q == qid]
         assert len(docs) == len(set(docs))
 
 
@@ -316,96 +342,23 @@ def test_resume_rejects_config_change(spark, docs_df, tmp_path_factory):
         )
 
 
-def test_auto_strategy_rule():
-    """Driver-side routing rule, pinned against the measured regimes
-    (see _auto_strategy docstring)."""
-    from bm25_chroma_spark.index.wand import _auto_strategy
-
-    BS = 128
-    # at-scale selective regime (r9 recalibration): the anchor fills
-    # the top-k AND skipping removes all but ~1/200th of the hot
-    # postings (_DAAT_COST_RATIO — the measured cost gap between the
-    # Python DAAT and the r9 vectorized exhaustive) -> wand
-    big = {"anchor": 1_000, "hot1": 90_000_000, "hot2": 100_000_000}
-    sel = [(1, "anchor", 1), (1, "hot1", 1), (1, "hot2", 1)]
-    assert _auto_strategy(sel, big, 1e8, 10, BS) == "wand"
-    # a denser anchor (10k x 128 x 200 > 100M hot): the numpy
-    # exhaustive streams the hot lists faster than the DAAT can skip
-    # them -> exhaustive
-    assert _auto_strategy(
-        sel,
-        {"anchor": 10_000, "hot1": 90_000_000, "hot2": 100_000_000},
-        1e8, 10, BS,
-    ) == "exhaustive"
-    # sandbox-scale selective regime: anchor df 1.5k x block 128 >
-    # hot df 95k -> every hot block contains an anchor doc, skipping
-    # cannot engage (measured: exhaustive wins/ties) -> exhaustive
-    small = {"anchor": 1500, "hot1": 95000, "hot2": 100000}
-    assert _auto_strategy(sel, small, 100_000.0, 10, BS) == "exhaustive"
-    # hot-only: flat bounds, nothing prunable
-    assert _auto_strategy(
-        [(1, "hot1", 1), (1, "hot2", 1)], big, 1e8, 10, BS
-    ) == "exhaustive"
-    # unique-rare anchor cannot fill the top-k: hot-only docs rank too
-    assert _auto_strategy(
-        [(1, "rare", 1), (1, "hot1", 1)],
-        {"rare": 1, "hot1": 90_000_000}, 1e8, 10, BS,
-    ) == "exhaustive"
-    # tiny index: job overhead dominates, vectorized path wins
-    assert _auto_strategy(
-        sel, {"anchor": 15, "hot1": 200, "hot2": 300}, 500.0, 10, BS
-    ) == "exhaustive"
-    # MEASURED regimes (BENCH wand_1m, S=16 segments): 1M docs,
-    # anchor df 500 — pre-r9 this voted wand (20.9s vs the old
-    # engine's 67.3s); the r9 vectorized exhaustive runs the same
-    # batch in 1.9s vs the DAAT's 18.1s, so the recalibrated rule
-    # votes exhaustive (500 x 128 x 200 >> 1M). 200k docs, anchor
-    # df 100 < k*S -> per-segment top-k never fills, WAND degenerates
-    # (r4: 34s vs 5.3s) -> exhaustive
-    m1 = [(1, "anchor", 1), (1, "hota", 1), (1, "hotb", 1), (1, "hotc", 1)]
-    assert _auto_strategy(
-        m1, {"anchor": 500, "hota": 10**6, "hotb": 10**6, "hotc": 10**6},
-        1e6, 10, BS, n_segments=16,
-    ) == "exhaustive"
-    assert _auto_strategy(
-        m1, {"anchor": 100, "hota": 200_000, "hotb": 200_000,
-             "hotc": 200_000},
-        200_000.0, 10, BS, n_segments=16,
-    ) == "exhaustive"
-
-
 def test_auto_strategy_results_identical(spark, shard_dir, queries_df):
-    """auto (which may serve the driver-local cached DAAT for small
-    queries) must match exhaustive: rank/doc identity exactly, scores
-    to rel_tol like the wand-vs-exhaustive contract — float summation
-    order differs between a DAAT term-order sum and the distributed
-    shuffle-order agg for 3+-term queries."""
+    """auto through the DataFrame API (a DataFrame of queries in, the
+    driver path's Arrow-backed result out) == exhaustive, exactly."""
     idx = ShardedIndex(spark, shard_dir)
-    a = {
-        (r["query_id"], r["rank"]): (r["doc_id"], r["score"])
-        for r in search_sharded(
-            idx, queries_df, top_k=10, strategy="auto"
-        ).collect()
-    }
-    e = {
-        (r["query_id"], r["rank"]): (r["doc_id"], r["score"])
-        for r in search_sharded(
-            idx, queries_df, top_k=10, strategy="exhaustive"
-        ).collect()
-    }
-    assert set(a) == set(e)
-    for k in a:
-        assert a[k][0] == e[k][0], (k, a[k], e[k])
-        assert math.isclose(a[k][1], e[k][1], rel_tol=1e-9), k
+    a = search_sharded(idx, queries_df, top_k=10, strategy="auto")
+    e = search_sharded(idx, queries_df, top_k=10, strategy="exhaustive")
+    assert _by_rank(a.collect()) == _by_rank(e.collect())
 
 
 def test_postings_cache_warm_identical_and_bounded(
     spark, shard_dir, queries_df
 ):
-    """The cached driver-local path: first auto call populates the
+    """The cached driver path: first auto call populates the
     generation-tagged LRU, the warm repeat serves from it with
-    identical results, use_cache=False bypasses it, and the byte
-    budget evicts LRU entries instead of growing unboundedly."""
+    identical results, the distributed 'exhaustive' plan bypasses it,
+    and the byte budget evicts LRU entries instead of growing
+    unboundedly."""
     idx = ShardedIndex(spark, shard_dir)
     a = search_sharded(idx, queries_df, top_k=10, strategy="auto").collect()
     assert idx._postings_cache  # populated (small fixture fits)
@@ -415,7 +368,7 @@ def test_postings_cache_warm_identical_and_bounded(
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     assert idx._postings_cache_used == used0  # warm: no growth
     c = search_sharded(
-        idx, queries_df, top_k=10, strategy="auto", use_cache=False
+        idx, queries_df, top_k=10, strategy="exhaustive"
     ).collect()
     got = {(r[0], r[3]): r[1] for r in map(tuple, c)}
     want = {(r[0], r[3]): r[1] for r in map(tuple, a)}
@@ -489,93 +442,6 @@ def test_df_cache_reused_and_invalidated(spark, shard_dir, queries_df):
     assert idx._df_cache == snapshot  # no growth on repeat
     idx.refresh()
     assert idx._df_cache == {}
-
-
-def test_wand_vote_qids_is_per_query():
-    """A mixed batch votes per QUERY: the anchored query goes to wand,
-    the flat one to exhaustive — not one majority strategy for both."""
-    from bm25_chroma_spark.index.wand import _wand_vote_qids
-
-    BS = 128
-    dfm = {
-        "anchor": 1_000,
-        "hot1": 90_000_000,
-        "hot2": 100_000_000,
-    }
-    qt = [
-        (1, "anchor", 1), (1, "hot1", 1), (1, "hot2", 1),  # anchored
-        (2, "hot1", 1), (2, "hot2", 1),                    # flat
-    ]
-    assert _wand_vote_qids(qt, dfm, 1e8, 10, BS) == {1}
-
-
-def test_auto_split_routing_fuzz(spark, shard_dir, queries_df, monkeypatch):
-    """ANY per-query vote split must return exactly the exhaustive
-    result set — fuzz random splits (including empty and full wand
-    sides) through the union plumbing."""
-    import random
-
-    import bm25_chroma_spark.index.wand as wand_mod
-
-    idx = ShardedIndex(spark, shard_dir)
-    want = {
-        (r["query_id"], r["rank"]): (r["doc_id"], round(r["score"], 9))
-        for r in search_sharded(
-            idx, queries_df, top_k=8, strategy="exhaustive"
-        ).collect()
-    }
-    qids = sorted(
-        r["query_id"] for r in queries_df.select("query_id").collect()
-    )
-    rng = random.Random(41)
-    splits = [set(), set(qids)] + [
-        {q for q in qids if rng.random() < rng.choice((0.25, 0.5, 0.75))}
-        for _ in range(4)
-    ]
-    for forced in splits:
-        monkeypatch.setattr(
-            wand_mod, "_wand_vote_qids", lambda *a, _f=forced, **k: _f
-        )
-        got = {
-            (r["query_id"], r["rank"]): (r["doc_id"], round(r["score"], 9))
-            for r in search_sharded(
-                idx, queries_df, top_k=8, strategy="auto"
-            ).collect()
-        }
-        assert got == want, f"split {sorted(forced)}"
-        monkeypatch.undo()
-
-
-def test_auto_mixed_batch_union_matches_exhaustive(
-    spark, shard_dir, queries_df, monkeypatch
-):
-    """Force a mixed per-query vote and check the split execution
-    (exhaustive sublist UNION wand sublist) returns exactly what a
-    single-strategy run returns for every query."""
-    import bm25_chroma_spark.index.wand as wand_mod
-
-    qids = sorted(
-        r["query_id"] for r in queries_df.select("query_id").collect()
-    )
-    assert len(qids) >= 2
-    forced = set(qids[::2])  # every other query votes wand
-
-    monkeypatch.setattr(
-        wand_mod, "_wand_vote_qids", lambda *a, **k: forced
-    )
-    idx = ShardedIndex(spark, shard_dir)
-    mixed = search_sharded(
-        idx, queries_df, top_k=10, strategy="auto"
-    ).collect()
-    ex = search_sharded(
-        idx, queries_df, top_k=10, strategy="exhaustive"
-    ).collect()
-    m = {(r["query_id"], r["rank"]): (r["doc_id"], r["score"]) for r in mixed}
-    e = {(r["query_id"], r["rank"]): (r["doc_id"], r["score"]) for r in ex}
-    assert set(m) == set(e)
-    for k in e:
-        assert m[k][0] == e[k][0], k
-        assert math.isclose(m[k][1], e[k][1], rel_tol=1e-9), k
 
 
 def test_map_docs_partials_matches_reference():

@@ -57,7 +57,7 @@ def test_warm_facade_zero_jobs_and_identical(spark, tmp_path, jobs):
 
 
 def test_warm_empty_result_zero_jobs(spark, tmp_path, jobs):
-    """A no-match query must not pay a job either: empty local-DAAT
+    """A no-match query must not pay a job either: empty driver-path
     results plan as an empty LocalTableScan, not Scan ExistingRDD
     (the pandas->Arrow empty-frame fallback wart, fixed r6)."""
     r = _mk(spark, tmp_path, n=40)
@@ -277,7 +277,7 @@ def test_queries_df_binds_vector_column_by_name(spark):
 def test_prewarm_reloaded_handle_first_repeat_query(spark, tmp_path, jobs):
     """VERDICT-r6 #4: a retriever reconstructed on a fresh driver
     starts cold; after save_hot_set() + prewarm() the FIRST repeat
-    query runs the driver DAAT (at most the bounded uid-enrichment
+    query runs the driver path (at most the bounded uid-enrichment
     job — no scan+decode pipeline) with identical results."""
     r = _mk(spark, tmp_path, n=60, name="prewarm")
     q = "alpha spark document"
