@@ -251,13 +251,10 @@ class _DriverBatch(NamedTuple):
     d_sum_dl: int
 
     def write(self, tmp_dir: Path) -> None:
-        import pyarrow.parquet as pq
-
         for name, table in (("shards", self.shards),
                             ("doc_stats", self.doc_stats)):
             if table is not None:
-                (tmp_dir / name).mkdir(parents=True)
-                pq.write_table(table, tmp_dir / name / "part-00000.parquet")
+                write_arrow_dir(tmp_dir / name, table)
 
 
 def _arrow_schema(ddl: str):
@@ -269,37 +266,44 @@ def _arrow_schema(ddl: str):
     return to_arrow_schema(_parse_datatype_string(ddl))
 
 
+def write_arrow_dir(d: Path, table, success: bool = True) -> None:
+    """Write ``table`` as the one data file of the parquet dir ``d``,
+    as a Spark write leaves it: the file lands under a dot-prefixed
+    name and is renamed into place (readers skip '.' and '_' names, so
+    a crash mid-write leaves no torn data file), then the _SUCCESS
+    marker."""
+    import pyarrow.parquet as pq
+
+    d.mkdir(parents=True, exist_ok=True)
+    pq.write_table(table, d / ".part-00000.parquet")
+    (d / ".part-00000.parquet").replace(d / "part-00000.parquet")
+    if success:
+        (d / "_SUCCESS").touch()
+
+
 def _driver_batch(index, upserts, delete_docs) -> Optional[_DriverBatch]:
     """The driver path of apply_dml, or None when a bound sends the
     batch to the distributed path. Reads only; writes nothing."""
-    from collections import Counter
-
     import numpy as np
     import pyarrow as pa
 
-    from bm25_chroma_spark.functions.tokenizer import tokenize_py
     from bm25_chroma_spark.index import reader, wand
-    from bm25_chroma_spark.index.shards import bucket_of
+    from bm25_chroma_spark.index.shards import (
+        _driver_tokens,
+        _term_buckets,
+        _term_counts,
+    )
 
     got = _collect_small([upserts, delete_docs], reader.MAX_POINT_IDS)
     if got is None:
         return None
     (up_ids, up_texts), (del_ids, del_texts) = got
 
-    # tokenize_docs semantics: zero-token docs are dropped (they add
-    # no postings and leave the index as a deleted doc would)
-    terms: set = set()
-    for t in del_texts:
-        terms.update(tokenize_py(t))
-    new_ids, new_dl, new_tf = [], [], []
-    for d, t in zip(up_ids.tolist(), up_texts):
-        toks = tokenize_py(t)
-        terms.update(toks)
-        if toks:
-            new_ids.append(d)
-            new_dl.append(len(toks))
-            new_tf.append(Counter(toks))
-    terms = sorted(terms)
+    # the build's tokenize core; tokenize_docs semantics: zero-token
+    # docs add no postings and leave the index as a deleted doc would
+    new = _term_counts(_driver_tokens(up_texts))
+    del_terms = _term_counts(_driver_tokens(del_texts)).terms
+    terms = sorted(set(new.terms) | set(del_terms))
 
     # the affected terms' summed df must fit the query bound
     if terms:
@@ -318,18 +322,21 @@ def _driver_batch(index, upserts, delete_docs) -> Optional[_DriverBatch]:
     # merged one term bucket at a time: a bucket's rows, decoded
     # postings and encoder objects are freed before the next bucket's
     # are read, which keeps the driver's peak memory to one bucket
+    n_buckets = index.config.num_term_buckets
+    post_bucket = _term_buckets(new.terms, n_buckets)[new.code]
     by_bucket: dict = {}
-    for t in terms:
-        by_bucket.setdefault(
-            bucket_of(t, index.config.num_term_buckets), []
-        ).append(t)
+    for t, b in zip(terms, _term_buckets(terms, n_buckets).tolist()):
+        by_bucket.setdefault(b, []).append(t)
     tables = []
-    for b_terms in by_bucket.values():
+    for b, b_terms in by_bucket.items():
         rows = reader.shard_rows(index, b_terms)
         if rows is None:
             return None
+        k = post_bucket == b
         tables.append(_merged_shards(
-            index, b_terms, rows, victims, (new_ids, new_dl, new_tf)
+            index, b_terms, rows, victims,
+            (new.terms[new.code[k]], up_ids[new.doc[k]], new.tf[k],
+             new.dl[new.doc[k]]),
         ))
         del rows
     shards = pa.concat_tables(tables) if tables else None
@@ -338,15 +345,16 @@ def _driver_batch(index, upserts, delete_docs) -> Optional[_DriverBatch]:
     # to dl=0 (plain deletes, unknown ids and upserts-to-empty-text —
     # the reference removes first, then bails on empty tokens,
     # bm25.py:151-156); re-added docs get their fresh dl
-    dl_of = dict(zip(new_ids, new_dl))
+    dl_of = dict(zip(up_ids.tolist(), new.dl.tolist()))
     ds_ids = victims.tolist()
+    ds_dl = [dl_of.get(d, 0) for d in ds_ids]
     doc_stats = pa.Table.from_pydict(
-        {"doc_id": ds_ids, "dl": [dl_of.get(d, 0) for d in ds_ids]},
+        {"doc_id": ds_ids, "dl": ds_dl},
         schema=_arrow_schema("doc_id long, dl int"),
     )
     d_docs = d_sum = 0
-    for d in ds_ids:
-        was, now = prior.get(d, 0), dl_of.get(d, 0)
+    for d, now in zip(ds_ids, ds_dl):
+        was = prior.get(d, 0)
         d_docs += (now > 0) - (was > 0)
         d_sum += now - was
     return _DriverBatch(shards, doc_stats, len(terms), d_docs, d_sum)
@@ -355,26 +363,25 @@ def _driver_batch(index, upserts, delete_docs) -> Optional[_DriverBatch]:
 def _merged_shards(index, terms, old_rows, victims, new):
     """Shard rows of ``terms`` as an Arrow table: their surviving
     stored postings (``old_rows`` decoded as one slice, ``victims``
-    dropped) plus the batch's ``new`` postings of these terms (ids,
-    doc lengths, term Counters), re-capped, re-encoded per (bucket,
-    segment) with the build's codec, and a df=0 tombstone for every
-    (term, segment) that emptied out. Each (bucket, segment) becomes
-    Arrow as soon as it is encoded, so its per-row Python objects
-    never pile up on the driver."""
+    dropped) plus the batch's ``new`` postings of these terms (flat
+    term, doc id, tf and doc length arrays), re-capped, re-encoded per
+    (bucket, segment) with the build's codec, and a df=0 tombstone for
+    every (term, segment) that emptied out. Each (bucket, segment)
+    becomes Arrow as soon as it is encoded, so its per-row Python
+    objects never pile up on the driver."""
     import numpy as np
     import pyarrow as pa
 
     from bm25_chroma_spark.index.encode import decode_flat_slice
     from bm25_chroma_spark.index.shards import (
+        _cap_keep,
         _encode_flat_slice,
         bucket_of,
         hash_segment_np,
     )
 
     cfg = index.config
-    mine = set(terms)
-    new_ids, new_dl, new_tf = new
-    new_tf = [{t: f for t, f in c.items() if t in mine} for c in new_tf]
+    n_term, n_doc, n_tf, n_dl = new
     # surviving stored postings of the affected terms ...
     per_row, o_doc, o_tf, o_dl = decode_flat_slice(
         [r["doc_bytes"] for r in old_rows],
@@ -384,21 +391,14 @@ def _merged_shards(index, terms, old_rows, victims, new):
     )
     keep = ~np.isin(o_doc, victims)
     # ... plus the batch's new postings
-    n_new = [len(c) for c in new_tf]
-    n_doc = np.repeat(np.asarray(new_ids, dtype=np.int64), n_new)
     term = np.concatenate((
         np.repeat(np.array([r["term"] for r in old_rows], dtype=object),
                   per_row)[keep],
-        np.array([t for c in new_tf for t in c], dtype=object),
+        n_term,
     ))
     doc = np.concatenate((o_doc[keep], n_doc))
-    tf = np.concatenate((
-        o_tf[keep],
-        np.array([f for c in new_tf for f in c.values()], dtype=np.int64),
-    ))
-    dl = np.concatenate(
-        (o_dl[keep], np.repeat(np.asarray(new_dl, dtype=np.int64), n_new))
-    )
+    tf = np.concatenate((o_tf[keep], n_tf))
+    dl = np.concatenate((o_dl[keep], n_dl))
     seg = np.concatenate((
         np.repeat(np.array([r["segment"] for r in old_rows],
                            dtype=np.int64), per_row)[keep],
@@ -409,13 +409,7 @@ def _merged_shards(index, terms, old_rows, victims, new):
     if cfg.max_postings_per_term and index.build_cap_physical:
         # reference flush semantics (bm25.py:176-195): re-truncate each
         # affected term to the cap in (tf desc, doc_id asc) order
-        order = np.lexsort((doc, -tf, codes))
-        c = codes[order]
-        starts = np.flatnonzero(np.r_[True, c[1:] != c[:-1]])
-        rank = np.arange(len(c)) - np.repeat(
-            starts, np.diff(np.r_[starts, len(c)])
-        )
-        k = order[rank < cfg.max_postings_per_term]
+        k = _cap_keep(codes, doc, tf, cfg.max_postings_per_term)
         codes, doc, tf, dl, seg = codes[k], doc[k], tf[k], dl[k], seg[k]
     bucket_map = {t: bucket_of(t, cfg.num_term_buckets) for t in terms}
     bucket = np.array([bucket_map[t] for t in uniq], dtype=np.int64)[codes]

@@ -32,6 +32,17 @@ manifest marks completion; re-running skips complete groups (the
 driver-visible crash-recovery path). Buckets give query-time
 partition pruning: a query touches only the buckets its terms hash
 to.
+
+Two paths write one base (pinned row for row by
+tests/test_driver_build.py):
+
+* Spark: the partials pass, then one merge+encode job per group.
+* driver: a fresh build of a local relation of at most
+  reader.MAX_POINT_IDS rows (_build_on_driver) — the same tokenize
+  core (_term_counts), build cap and codec (_encode_flat_slice), the
+  files written with pyarrow in the Spark schemas and in the Spark
+  path's order, so the Spark path resumes a crashed driver build.
+  It launches no Spark job.
 """
 
 from __future__ import annotations
@@ -42,7 +53,7 @@ import math
 import time
 from dataclasses import asdict
 from pathlib import Path
-from typing import Dict, Iterator, List, Optional
+from typing import Dict, Iterator, List, NamedTuple, Optional
 
 import numpy as np
 import pandas as pd
@@ -127,19 +138,16 @@ def _map_docs_to_partials(
     (doc_ids, dls) arrays so doc stats come out of the same pass —
     empty docs are skipped entirely (reference bm25.py:155-156).
     """
-    import zlib
-
     from bm25_chroma_spark.functions.tokenizer import tokenize_py
 
     def gen(batches):
         # Batch-vectorized (r5; content-identical to the original
         # per-doc Counter/append loop — the accumulation was 57% of
         # this pass's Python CPU, pinned by
-        # test_map_docs_partials_matches_reference): tokenize stays a
-        # per-doc C regex call, then tf counting is ONE np.unique
-        # over packed (doc, term-code) keys and the per-(term,
-        # segment) partial rows come from grouped slicing of the
-        # sorted arrays — no per-token dict or list work.
+        # test_map_docs_partials_matches_reference): tf counting is
+        # _term_counts, and the per-(term, segment) partial rows come
+        # from grouped slicing of the sorted arrays — no per-token
+        # dict or list work.
         for pdf in batches:
             ids = pdf["doc_id"].to_numpy(dtype=np.int64)
             if pretokenized:
@@ -148,27 +156,13 @@ def _map_docs_to_partials(
                 ]
             else:
                 tok_lists = [tokenize_py(t) for t in pdf["text"]]
-            counts = np.fromiter(
-                (len(t) for t in tok_lists), dtype=np.int64,
-                count=len(tok_lists),
-            )
-            nz = counts > 0  # empty docs are skipped entirely
+            tc = _term_counts(tok_lists)
+            nz = tc.dl > 0  # empty docs are skipped entirely
             if not nz.any():
                 continue
-            flat = [tok for ts in tok_lists for tok in ts]
-            doc_idx = np.repeat(
-                np.arange(len(tok_lists), dtype=np.int64), counts
-            )
-            codes, uniq = pd.factorize(np.asarray(flat, dtype=object))
-            # tf per (doc, term): one sort-based unique over packed
-            # keys (both halves < 2^31 — a 10k-row Arrow batch with
-            # <2^31 distinct tokens by construction)
-            key = (doc_idx << 32) + codes.astype(np.int64)
-            ukey, tf = np.unique(key, return_counts=True)
-            udoc = (ukey >> 32).astype(np.int64)
-            ucode = (ukey & 0xFFFFFFFF).astype(np.int64)
+            udoc, ucode, tf, uniq = tc.doc, tc.code, tc.tf, tc.terms
             did = ids[udoc]
-            dl = counts[udoc]  # dl = post-filter token count
+            dl = tc.dl[udoc]  # dl = post-filter token count
             seg = hash_segment_np(did, salt_factor).astype(np.int64)
             # group rows by (term, segment); udoc last keeps each
             # partial's doc order = batch order, like the append loop
@@ -183,13 +177,7 @@ def _map_docs_to_partials(
             ) + 1
             starts = np.concatenate(([0], change))
             ends = np.concatenate((change, [len(c)]))
-            term_buckets = np.fromiter(
-                (
-                    zlib.crc32(t.encode("utf-8")) % n_buckets
-                    for t in uniq
-                ),
-                dtype=np.int64, count=len(uniq),
-            )
+            term_buckets = _term_buckets(uniq, n_buckets)
             gc = c[starts]
             rows = {
                 "bucket": term_buckets[gc].tolist() + [-1],
@@ -201,11 +189,71 @@ def _map_docs_to_partials(
                 "tfs": [g_tf[a:b] for a, b in zip(starts, ends)]
                 + [np.zeros(0, dtype=np.int32)],
                 "dls": [g_dl[a:b] for a, b in zip(starts, ends)]
-                + [counts[nz].astype(np.int32)],
+                + [tc.dl[nz].astype(np.int32)],
             }
             yield pd.DataFrame(rows)
 
     return gen
+
+
+class _TermCounts(NamedTuple):
+    """Per-(doc, term) token counts of a list of tokenized docs, one
+    entry per distinct pair in (doc, term code) order: ``doc`` indexes
+    the input list, ``code`` indexes ``terms``. ``dl`` is every input
+    doc's token count (0 for a doc with no token)."""
+
+    doc: np.ndarray
+    code: np.ndarray
+    tf: np.ndarray
+    terms: np.ndarray
+    dl: np.ndarray
+
+
+def _term_counts(tok_lists: List[List[str]]) -> _TermCounts:
+    """The tokenize core of every index write (the build's partials
+    pass and driver path, and DML's driver path): the tokens are
+    factorized once and tf counting is ONE np.unique over packed
+    (doc, term-code) keys."""
+    dl = np.fromiter(
+        (len(t) for t in tok_lists), dtype=np.int64, count=len(tok_lists)
+    )
+    doc_idx = np.repeat(np.arange(len(tok_lists), dtype=np.int64), dl)
+    codes, uniq = pd.factorize(
+        np.asarray([tok for ts in tok_lists for tok in ts], dtype=object)
+    )
+    # both halves < 2^31: a 10k-row Arrow batch (or a driver batch of
+    # at most reader.MAX_POINT_IDS docs) holds fewer distinct tokens
+    key = (doc_idx << 32) + codes.astype(np.int64)
+    ukey, tf = np.unique(key, return_counts=True)
+    return _TermCounts(
+        doc=(ukey >> 32).astype(np.int64),
+        code=(ukey & 0xFFFFFFFF).astype(np.int64),
+        tf=tf.astype(np.int64),
+        terms=np.asarray(uniq, dtype=object),
+        dl=dl,
+    )
+
+
+def _driver_tokens(texts) -> List[List[str]]:
+    """tokenize_py of each text, for a batch tokenized on the driver:
+    tokens are interned, so the batch holds one string object per
+    distinct token (~8 MB less peak driver RSS on perfbench's
+    1,000-doc build)."""
+    import sys
+
+    from bm25_chroma_spark.functions.tokenizer import tokenize_py
+
+    return [list(map(sys.intern, tokenize_py(t))) for t in texts]
+
+
+def _term_buckets(terms, n_buckets: int) -> np.ndarray:
+    """bucket_of for every term of ``terms``, as int64."""
+    import zlib
+
+    return np.fromiter(
+        (zlib.crc32(t.encode("utf-8")) % n_buckets for t in terms),
+        dtype=np.int64, count=len(terms),
+    )
 
 
 def hash_segment(doc_id: int, salt_factor: int) -> int:
@@ -474,6 +522,159 @@ def _cap_thresholds(partials: DataFrame, cap: int) -> DataFrame:
     )
 
 
+def _cap_keep(code: np.ndarray, doc: np.ndarray, tf: np.ndarray,
+              cap: int) -> np.ndarray:
+    """Indexes of the postings a build cap keeps: each term's first
+    ``cap`` in the reference's order (tf desc, doc_id asc;
+    bm25.py:56,190-191)."""
+    order = np.lexsort((doc, -tf, code))
+    c = code[order]
+    starts = np.flatnonzero(np.r_[True, c[1:] != c[:-1]])
+    rank = np.arange(len(c)) - np.repeat(
+        starts, np.diff(np.r_[starts, len(c)])
+    )
+    return order[rank < cap]
+
+
+def _stats(config: BM25Config, cfg_hash: str, n_docs: int,
+           sum_dl: int) -> dict:
+    return {
+        "n_docs": n_docs,
+        # integer Σdl: DML moves n_docs/sum_dl arithmetically
+        "sum_dl": sum_dl,
+        "avgdl": (sum_dl / n_docs) if n_docs else 0.0,
+        "config": asdict(config),
+        "config_hash": cfg_hash,
+        "built_at": time.time(),
+        # r3+: the build honors max_postings_per_term PHYSICALLY
+        # (threshold filter at encode). Indexes lacking this marker
+        # were built storing postings uncapped — their query path must
+        # keep refusing a binding build cap, and DML must not re-cap
+        # (ShardedIndex.build_cap_physical).
+        "build_cap_enforced": True,
+    }
+
+
+def _write_manifest(base: Path, g: int, cfg_hash: str, stats: dict,
+                    use_jvm_tokenizer: bool, metrics: dict) -> dict:
+    manifest = {
+        "group": g,
+        "status": "complete",
+        "config_hash": cfg_hash,
+        "lineage": {
+            "input_docs": stats["n_docs"],
+            "tokenizer": "jvm" if use_jvm_tokenizer else "pandas",
+        },
+        "metrics": metrics,
+    }
+    (base / "manifests" / f"group_{g}.json").write_text(
+        json.dumps(manifest, indent=2)
+    )
+    return manifest
+
+
+def _small_local_docs(docs: DataFrame, id_col: str, text_col: str):
+    """(int64 ids, texts) of ``docs`` when it is a local relation of
+    at most reader.MAX_POINT_IDS rows (collected with no Spark job),
+    else None."""
+    from bm25_chroma_spark.index import reader
+    from bm25_chroma_spark.index.dml import _is_local
+
+    bound = reader.MAX_POINT_IDS
+    sel = docs.select(
+        F.col(id_col).cast("long").alias("doc_id"),
+        F.col(text_col).alias("text"),
+    ).limit(bound + 1)
+    if not _is_local(sel):
+        return None
+    rows = sel.collect()
+    if len(rows) > bound:
+        return None
+    return (np.asarray([r[0] for r in rows], dtype=np.int64),
+            [r[1] for r in rows])
+
+
+def _build_on_driver(base: Path, ids: np.ndarray, texts: List[str],
+                     config: BM25Config, bucket_groups: int,
+                     cfg_hash: str, use_jvm_tokenizer: bool) -> dict:
+    """build_sharded_index of a small local input on the driver. Same
+    tokenize core (_term_counts), build cap and codec
+    (_encode_flat_slice) as the Spark path, and the same base layout
+    written with pyarrow in the Spark schemas, in the Spark path's
+    order: stats.json, doc_stats, then each group's shards followed by
+    its manifest — so a crash leaves a state the Spark path resumes.
+    No partials table: it exists for group fan-out and resume.
+    Manifest ``terms`` is exact here (an HLL estimate in Spark)."""
+    import pyarrow as pa
+
+    from bm25_chroma_spark.index.dml import _arrow_schema, write_arrow_dir
+
+    tc = _term_counts(_driver_tokens(texts))
+    live = tc.dl > 0  # empty docs are skipped entirely
+    stats = _stats(config, cfg_hash, int(live.sum()), int(tc.dl.sum()))
+    (base / "stats.json").write_text(json.dumps(stats, indent=2))
+    write_arrow_dir(base / "doc_stats.parquet", pa.Table.from_pydict(
+        {"doc_id": ids[live], "dl": tc.dl[live].astype(np.int32)},
+        schema=_arrow_schema("doc_id long, dl int"),
+    ))
+
+    code, did, tf = tc.code, ids[tc.doc], tc.tf
+    dl = tc.dl[tc.doc]
+    if config.max_postings_per_term:
+        k = _cap_keep(code, did, tf, config.max_postings_per_term)
+        code, did, tf, dl = code[k], did[k], tf[k], dl[k]
+    seg = hash_segment_np(did, config.salt_factor).astype(np.int64)
+    bucket = _term_buckets(tc.terms, config.num_term_buckets)[code]
+    schema = _arrow_schema(SHARD_FILE_DDL)
+    totals = {"postings": 0, "terms": 0, "bytes": 0, "wall_sec": 0.0}
+    for g in range(bucket_groups):
+        t0 = time.time()
+        mine = np.flatnonzero(bucket % bucket_groups == g)
+        order = mine[np.lexsort((seg[mine], bucket[mine]))]
+        cut = np.flatnonzero(
+            np.diff(bucket[order]) | np.diff(seg[order])
+        ) + 1
+        by_bucket: Dict[int, list] = {}
+        dfs: List[int] = []
+        n_bytes = 0
+        for part in np.split(order, cut) if len(order) else []:
+            b = int(bucket[part[0]])
+            pdf = _encode_flat_slice(
+                code[part], tc.terms, did[part], tf[part], dl[part], b,
+                int(seg[part[0]]), config.block_size,
+            )
+            dfs.extend(pdf["df"].tolist())
+            n_bytes += sum(
+                len(x) for c in ("doc_bytes", "tf_bytes", "dl_bytes")
+                for x in pdf[c]
+            )
+            by_bucket.setdefault(b, []).append(pa.Table.from_pandas(
+                pdf.drop(columns="bucket"), schema=schema,
+                preserve_index=False,
+            ).replace_schema_metadata(None))
+        gdir = base / "shards" / f"group={g}"
+        gdir.mkdir(parents=True, exist_ok=True)
+        for b, tables in sorted(by_bucket.items()):
+            write_arrow_dir(gdir / f"bucket={b}", pa.concat_tables(tables),
+                            success=False)
+        (gdir / "_SUCCESS").touch()
+        metrics = {
+            "postings": sum(dfs),
+            # a term lives in one bucket, so in one group
+            "terms": len(np.unique(code[mine])),
+            "bytes": n_bytes,
+            "skew_ratio": (
+                max(dfs) / (sum(dfs) / len(dfs)) if dfs else 0.0
+            ),
+            "wall_sec": time.time() - t0,
+        }
+        _write_manifest(base, g, cfg_hash, stats, use_jvm_tokenizer, metrics)
+        for k in totals:
+            totals[k] += metrics[k]
+    return {"groups": bucket_groups, **totals, "n_docs": stats["n_docs"],
+            "avgdl": stats["avgdl"]}
+
+
 def build_sharded_index(
     docs: DataFrame,
     out_dir: str,
@@ -487,13 +688,27 @@ def build_sharded_index(
 ) -> dict:
     """Build (or resume) the physical index. Returns build metrics.
 
+    A fresh build (``out_dir`` missing or empty) of a local relation
+    of at most reader.MAX_POINT_IDS rows runs on the driver
+    (_build_on_driver) and launches no Spark job; any other input,
+    and every resume, runs the Spark path below.
+
     ``_fail_after_groups`` is a test hook that aborts mid-build to
     exercise the resume path.
     """
     base = Path(out_dir)
-    (base / "manifests").mkdir(parents=True, exist_ok=True)
-    spark = docs.sparkSession
     cfg_hash = _config_hash(config)
+    fresh = not base.exists() or not any(base.iterdir())
+    local = (
+        _small_local_docs(docs, id_col, text_col)
+        if fresh and _fail_after_groups is None else None
+    )
+    (base / "manifests").mkdir(parents=True, exist_ok=True)
+    if local is not None:
+        return _build_on_driver(
+            base, *local, config, bucket_groups, cfg_hash, use_jvm_tokenizer
+        )
+    spark = docs.sparkSession
 
     from pyspark.sql import Observation
 
@@ -598,21 +813,7 @@ def build_sharded_index(
             ).collect()[0]
         n_docs = int(row["n"] or 0)
         sum_dl = int(row["sum_dl"] or 0)
-        stats = {
-            "n_docs": n_docs,
-            # integer Σdl: DML moves n_docs/sum_dl arithmetically
-            "sum_dl": sum_dl,
-            "avgdl": (sum_dl / n_docs) if n_docs else 0.0,
-            "config": asdict(config),
-            "config_hash": cfg_hash,
-            "built_at": time.time(),
-            # r3+: the build honors max_postings_per_term PHYSICALLY
-            # (threshold filter at encode). Indexes lacking this
-            # marker were built storing postings uncapped — their
-            # query path must keep refusing a binding build cap, and
-            # DML must not re-cap (ShardedIndex.build_cap_physical).
-            "build_cap_enforced": True,
-        }
+        stats = _stats(config, cfg_hash, n_docs, sum_dl)
         stats_path.write_text(json.dumps(stats, indent=2))
 
     def _write_doc_stats() -> None:
@@ -688,31 +889,17 @@ def build_sharded_index(
             str(gdir)
         )
         m = obs.get
-        wall = time.time() - t0
-        manifest = {
-            "group": g,
-            "status": "complete",
-            "config_hash": cfg_hash,
-            "lineage": {
-                "input_docs": stats["n_docs"],
-                "tokenizer": "jvm" if use_jvm_tokenizer else "pandas",
-            },
-            "metrics": {
-                "postings": int(m["postings"] or 0),
-                "terms": int(m["terms"] or 0),
-                "bytes": int(m["bytes"] or 0),
-                "skew_ratio": (
-                    float(m["max_seg_df"] / m["avg_seg_df"])
-                    if m["avg_seg_df"]
-                    else 0.0
-                ),
-                "wall_sec": wall,
-            },
-        }
-        (base / "manifests" / f"group_{g}.json").write_text(
-            json.dumps(manifest, indent=2)
-        )
-        return manifest
+        return _write_manifest(base, g, cfg_hash, stats, use_jvm_tokenizer, {
+            "postings": int(m["postings"] or 0),
+            "terms": int(m["terms"] or 0),
+            "bytes": int(m["bytes"] or 0),
+            "skew_ratio": (
+                float(m["max_seg_df"] / m["avg_seg_df"])
+                if m["avg_seg_df"]
+                else 0.0
+            ),
+            "wall_sec": time.time() - t0,
+        })
 
     manifests: List[dict] = []
     if _fail_after_groups is not None:

@@ -49,7 +49,11 @@ from pyspark.sql import functions as F
 
 from bm25_chroma_spark.config import BM25Config
 from bm25_chroma_spark.index import reader
-from bm25_chroma_spark.index.dml import apply_dml
+from bm25_chroma_spark.index.dml import (
+    _arrow_schema,
+    apply_dml,
+    write_arrow_dir,
+)
 from bm25_chroma_spark.index.shards import ShardedIndex, build_sharded_index
 from bm25_chroma_spark.index.wand import search_sharded, search_sharded_rows
 from bm25_chroma_spark.operators.fusion import rrf_fuse_py
@@ -150,6 +154,10 @@ def default_embedder() -> Callable:
 
 def _doc_id_expr(uid_col):
     return F.xxhash64(uid_col)
+
+
+CORPUS_DDL = "doc_uid string, text string, meta_json string, deleted boolean"
+VECTORS_DDL = "doc_uid string, embedding array<double>"
 
 
 class _VecCache:
@@ -477,6 +485,16 @@ class SparkHybridRetriever:
         if metadatas is not None and len(metadatas) != len(documents):
             raise ValueError("Documents and metadatas must have same length")
         t0 = time.time()
+        n_input = len(documents)
+        if len(set(doc_ids)) < n_input:
+            # a uid repeated within the batch keeps its last text and
+            # metadata, as the reference's one-chunk-at-a-time upsert
+            # leaves it (one index posting list per id)
+            keep = sorted({u: i for i, u in enumerate(doc_ids)}.values())
+            documents = [documents[i] for i in keep]
+            doc_ids = [doc_ids[i] for i in keep]
+            if metadatas is not None:
+                metadatas = [metadatas[i] for i in keep]
 
         # old versions of re-added ids: their stored text defines the
         # affected terms of the implicit remove (reference re-tokenizes
@@ -521,21 +539,30 @@ class SparkHybridRetriever:
             ),
             schema="doc_uid string, text string, meta_json string",
         ).withColumn("deleted", F.lit(False))
-        batch.write.mode("overwrite").parquet(str(self._next_gen("corpus")))
-
-        vecs = self.embed(documents)
-        self.spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "doc_uid": pd.Series(doc_ids, dtype=object),
-                    "embedding": pd.Series(
-                        [[float(x) for x in v] for v in vecs],
-                        dtype=object,
-                    ),
-                }
-            ),
-            schema="doc_uid string, embedding array<double>",
-        ).write.mode("overwrite").parquet(str(self._next_gen("vectors")))
+        vecs = [[float(x) for x in v] for v in self.embed(documents)]
+        if len(doc_ids) <= reader.MAX_POINT_IDS:
+            # small batches: both generations written by pyarrow on
+            # the driver, no Spark job
+            self._write_local_gen("corpus", {
+                "doc_uid": doc_ids, "text": documents, "meta_json": metas,
+                "deleted": [False] * len(doc_ids),
+            })
+            self._write_local_gen(
+                "vectors", {"doc_uid": doc_ids, "embedding": vecs}
+            )
+        else:
+            batch.write.mode("overwrite").parquet(
+                str(self._next_gen("corpus"))
+            )
+            self.spark.createDataFrame(
+                pd.DataFrame(
+                    {
+                        "doc_uid": pd.Series(doc_ids, dtype=object),
+                        "embedding": pd.Series(vecs, dtype=object),
+                    }
+                ),
+                schema=VECTORS_DDL,
+            ).write.mode("overwrite").parquet(str(self._next_gen("vectors")))
 
         docs_long = batch.select(
             self._id_expr(F.col("doc_uid")).alias("doc_id"), "text"
@@ -561,9 +588,9 @@ class SparkHybridRetriever:
 
         total = time.time() - t0
         return {
-            "total_documents": len(documents),
+            "total_documents": n_input,
             "total_time_seconds": total,
-            "docs_per_second": len(documents) / total if total else 0.0,
+            "docs_per_second": n_input / total if total else 0.0,
             "mode": mode,
         }
 
@@ -717,24 +744,19 @@ class SparkHybridRetriever:
         """Up to reader.MAX_POINT_IDS ids resolve through a driver-side
         point read of the corpus (index/reader.py) and reach the index
         DML as a local relation, so a small remove writes its tombstone
-        generation in one Spark job and merges the index on the driver.
-        Above that bound (or the reader's byte budget) victims never
-        leave the cluster: the matched rows are written straight to the
-        tombstone generation, which is then read back (a pinned
-        snapshot) to drive the index DML — no driver-side row list, so
-        bulk deletes scale."""
+        generation with pyarrow and merges the index on the driver: no
+        Spark job. Above that bound (or the reader's byte budget)
+        victims never leave the cluster: the matched rows are written
+        straight to the tombstone generation, which is then read back
+        (a pinned snapshot) to drive the index DML — no driver-side row
+        list, so bulk deletes scale."""
         rows = self._live_rows(doc_ids)
         if rows is None:
             self._remove_victims(
                 self._filter_by_ids(self.corpus_df(), doc_ids)
             )
         elif len(rows):  # unknown ids no-op (reference bm25.py:229-230)
-            self._remove_victims(
-                self.spark.createDataFrame(
-                    rows, "doc_uid string, text string, meta_json string"
-                ),
-                self._local_docs(rows),
-            )
+            self._remove_victims(None, rows)
 
     def remove_documents_df(self, ids: DataFrame) -> None:
         """DataFrame-native bulk delete: ``ids`` carries a doc_uid
@@ -786,20 +808,29 @@ class SparkHybridRetriever:
         )
 
     def _remove_victims(
-        self, victims: DataFrame, local: Optional[DataFrame] = None
+        self, victims: Optional[DataFrame],
+        rows: Optional[pd.DataFrame] = None,
     ) -> None:
-        """Write the tombstone generation of ``victims`` (live corpus
-        rows), then hard-delete them from the index: from ``local``
-        (doc_id, text) when the caller holds them on the driver, else
-        from the written generation read back."""
-        if local is None and victims.isEmpty():
-            return  # unknown ids no-op (reference bm25.py:229-230)
-        gen_path = self._next_gen("corpus")
-        victims.withColumn("deleted", F.lit(True)).write.mode(
-            "overwrite"
-        ).parquet(str(gen_path))
-        delete_df = local
-        if delete_df is None:
+        """Write the tombstone generation of the victims (live corpus
+        rows), then hard-delete them from the index. ``rows``: the
+        victims held on the driver (at most reader.MAX_POINT_IDS, from
+        _live_rows), written with pyarrow and deleted from a local
+        relation; else ``victims``, written by Spark and read back."""
+        if rows is not None:
+            self._write_local_gen("corpus", {
+                "doc_uid": rows["doc_uid"].tolist(),
+                "text": rows["text"].tolist(),
+                "meta_json": rows["meta_json"].tolist(),
+                "deleted": [True] * len(rows),
+            })
+            delete_df = self._local_docs(rows)
+        else:
+            if victims.isEmpty():
+                return  # unknown ids no-op (reference bm25.py:229-230)
+            gen_path = self._next_gen("corpus")
+            victims.withColumn("deleted", F.lit(True)).write.mode(
+                "overwrite"
+            ).parquet(str(gen_path))
             delete_df = self.spark.read.parquet(str(gen_path)).select(
                 self._id_expr(F.col("doc_uid")).alias("doc_id"), "text"
             )
@@ -808,6 +839,19 @@ class SparkHybridRetriever:
         )
         self._index.refresh()
         self._maybe_compact()
+
+    def _write_local_gen(self, sub: str, columns: Dict[str, list]) -> None:
+        """The next ``sub`` generation from driver-held columns,
+        written by pyarrow in the schema a Spark write of the same rows
+        gives (CORPUS_DDL / VECTORS_DDL), so corpus_df, vectors_df,
+        reader.corpus_rows and _compact_store read it like a
+        Spark-written one."""
+        import pyarrow as pa
+
+        ddl = CORPUS_DDL if sub == "corpus" else VECTORS_DDL
+        write_arrow_dir(self._next_gen(sub), pa.Table.from_pydict(
+            columns, schema=_arrow_schema(ddl)
+        ))
 
     def _maybe_compact(self) -> None:
         """LSM maintenance: fold DML generations into the base once

@@ -38,6 +38,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # PySpark's DataFrame debugging walks the Python stack on every
+        # pyspark.sql.functions call (3-4 py4j calls each) and imports
+        # IPython when installed: ~26 MB of driver RSS, no engine use
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
