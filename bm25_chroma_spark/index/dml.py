@@ -210,6 +210,22 @@ def _is_local(df: DataFrame) -> bool:
     return plan.getClass().getSimpleName() == "LocalRelation"
 
 
+def _collect_local(df: DataFrame, bound: int):
+    """The (doc_id, text) rows of ``df`` as (int64 ids, texts) when it
+    is a local relation of at most ``bound`` rows, collected with no
+    Spark job; else None."""
+    import numpy as np
+
+    sel = df.limit(bound + 1)
+    if not _is_local(sel):
+        return None
+    got = sel.collect()
+    if len(got) > bound:
+        return None
+    return (np.asarray([r[0] for r in got], dtype=np.int64),
+            [r[1] for r in got])
+
+
 def _collect_small(frames, bound: int):
     """The (doc_id, text) rows of each frame in ``frames`` (None =
     no rows) as (int64 ids, texts), or None when they hold more than
@@ -221,8 +237,9 @@ def _collect_small(frames, bound: int):
     rows = [([], []) for _ in frames]
     if all(_is_local(f.limit(bound + 1)) for _, f in live):
         for i, f in live:
-            got = f.limit(bound + 1).collect()
-            rows[i] = ([r[0] for r in got], [r[1] for r in got])
+            rows[i] = _collect_local(f, bound)
+            if rows[i] is None:
+                return None
     elif live:
         # one limit over the union: under AQE every limit's exchange
         # is a job of its own
@@ -266,6 +283,13 @@ def _arrow_schema(ddl: str):
     return to_arrow_schema(_parse_datatype_string(ddl))
 
 
+# Rows per row group of a pyarrow-written data file. A large list-API
+# generation (one file) stays splittable for Spark scans and prunable
+# for point reads; at 1-2 KB a row this is about Spark's own 128 MB
+# parquet.block.size (pyarrow's default is 1Mi rows: one group).
+ARROW_ROW_GROUP_ROWS = 1 << 16
+
+
 def write_arrow_dir(d: Path, table, success: bool = True) -> None:
     """Write ``table`` as the one data file of the parquet dir ``d``,
     as a Spark write leaves it: the file lands under a dot-prefixed
@@ -275,7 +299,8 @@ def write_arrow_dir(d: Path, table, success: bool = True) -> None:
     import pyarrow.parquet as pq
 
     d.mkdir(parents=True, exist_ok=True)
-    pq.write_table(table, d / ".part-00000.parquet")
+    pq.write_table(table, d / ".part-00000.parquet",
+                   row_group_size=ARROW_ROW_GROUP_ROWS)
     (d / ".part-00000.parquet").replace(d / "part-00000.parquet")
     if success:
         (d / "_SUCCESS").touch()

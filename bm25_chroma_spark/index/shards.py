@@ -573,27 +573,6 @@ def _write_manifest(base: Path, g: int, cfg_hash: str, stats: dict,
     return manifest
 
 
-def _small_local_docs(docs: DataFrame, id_col: str, text_col: str):
-    """(int64 ids, texts) of ``docs`` when it is a local relation of
-    at most reader.MAX_POINT_IDS rows (collected with no Spark job),
-    else None."""
-    from bm25_chroma_spark.index import reader
-    from bm25_chroma_spark.index.dml import _is_local
-
-    bound = reader.MAX_POINT_IDS
-    sel = docs.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.col(text_col).alias("text"),
-    ).limit(bound + 1)
-    if not _is_local(sel):
-        return None
-    rows = sel.collect()
-    if len(rows) > bound:
-        return None
-    return (np.asarray([r[0] for r in rows], dtype=np.int64),
-            [r[1] for r in rows])
-
-
 def _build_on_driver(base: Path, ids: np.ndarray, texts: List[str],
                      config: BM25Config, bucket_groups: int,
                      cfg_hash: str, use_jvm_tokenizer: bool) -> dict:
@@ -699,10 +678,15 @@ def build_sharded_index(
     base = Path(out_dir)
     cfg_hash = _config_hash(config)
     fresh = not base.exists() or not any(base.iterdir())
-    local = (
-        _small_local_docs(docs, id_col, text_col)
-        if fresh and _fail_after_groups is None else None
-    )
+    local = None
+    if fresh and _fail_after_groups is None:
+        from bm25_chroma_spark.index import reader
+        from bm25_chroma_spark.index.dml import _collect_local
+
+        local = _collect_local(docs.select(
+            F.col(id_col).cast("long").alias("doc_id"),
+            F.col(text_col).alias("text"),
+        ), reader.MAX_POINT_IDS)
     (base / "manifests").mkdir(parents=True, exist_ok=True)
     if local is not None:
         return _build_on_driver(

@@ -525,48 +525,21 @@ class SparkHybridRetriever:
             _json.dumps(m) if m is not None else None
             for m in (metadatas or [None] * len(documents))
         ]
-        # Arrow-backed local relations (r9): plain-list createDataFrame
-        # pickles every row through the legacy path; a pandas frame
-        # ships as Arrow batches (guide §6 "Arrow for driver
-        # transfers") — same rows, same schema
-        batch = self.spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "doc_uid": pd.Series(doc_ids, dtype=object),
-                    "text": pd.Series(documents, dtype=object),
-                    "meta_json": pd.Series(metas, dtype=object),
-                }
-            ),
-            schema="doc_uid string, text string, meta_json string",
-        ).withColumn("deleted", F.lit(False))
         vecs = [[float(x) for x in v] for v in self.embed(documents)]
-        if len(doc_ids) <= reader.MAX_POINT_IDS:
-            # small batches: both generations written by pyarrow on
-            # the driver, no Spark job
-            self._write_local_gen("corpus", {
-                "doc_uid": doc_ids, "text": documents, "meta_json": metas,
-                "deleted": [False] * len(doc_ids),
-            })
-            self._write_local_gen(
-                "vectors", {"doc_uid": doc_ids, "embedding": vecs}
-            )
-        else:
-            batch.write.mode("overwrite").parquet(
-                str(self._next_gen("corpus"))
-            )
-            self.spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "doc_uid": pd.Series(doc_ids, dtype=object),
-                        "embedding": pd.Series(vecs, dtype=object),
-                    }
-                ),
-                schema=VECTORS_DDL,
-            ).write.mode("overwrite").parquet(str(self._next_gen("vectors")))
-
-        docs_long = batch.select(
-            self._id_expr(F.col("doc_uid")).alias("doc_id"), "text"
+        # both generations are written by pyarrow from the driver-held
+        # lists, at any batch size: no Spark job
+        self._write_local_gen("corpus", {
+            "doc_uid": doc_ids, "text": documents, "meta_json": metas,
+            "deleted": [False] * len(doc_ids),
+        })
+        self._write_local_gen(
+            "vectors", {"doc_uid": doc_ids, "embedding": vecs}
         )
+
+        docs_long = self._local_docs(pd.DataFrame({
+            "doc_uid": pd.Series(doc_ids, dtype=object),
+            "text": pd.Series(documents, dtype=object),
+        }))
         idx_dir = self.state / "index"
         if self._index is None:
             build_sharded_index(

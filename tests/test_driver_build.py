@@ -26,7 +26,11 @@ from pyspark.sql import functions as F
 from bm25_chroma_spark.config import BM25Config
 from bm25_chroma_spark.index import reader
 from bm25_chroma_spark.index.shards import ShardedIndex, build_sharded_index
-from bm25_chroma_spark.plans.retriever import SparkHybridRetriever
+from bm25_chroma_spark.plans.retriever import (
+    CORPUS_DDL,
+    VECTORS_DDL,
+    SparkHybridRetriever,
+)
 
 DDL = "doc_id long, text string"
 WORDS = (
@@ -186,6 +190,19 @@ def _live(r: SparkHybridRetriever):
     return corpus, vectors, r._live_rows(uids).to_dict("list")
 
 
+def _spark_writes_gens(r: SparkHybridRetriever, m) -> None:
+    """Route ``r``'s pyarrow generation writes through a Spark write
+    of the same rows in the same schema."""
+
+    def write(sub, columns):
+        ddl = CORPUS_DDL if sub == "corpus" else VECTORS_DDL
+        r.spark.createDataFrame(pd.DataFrame(columns), ddl).write.parquet(
+            str(r._next_gen(sub))
+        )
+
+    m.setattr(r, "_write_local_gen", write)
+
+
 def test_pyarrow_generations_read_like_spark_ones(
     spark, tmp_path, monkeypatch
 ):
@@ -204,9 +221,11 @@ def test_pyarrow_generations_read_like_spark_ones(
         ("remove", None, ["u3", "u27", "u31", "nope"], None),
     ]
     for op, docs, ids, md in steps:
-        for r, bound in ((fast, reader.MAX_POINT_IDS), (slow, 0)):
+        for r in (fast, slow):
             with monkeypatch.context() as m:
-                m.setattr(reader, "MAX_POINT_IDS", bound)
+                if r is slow:
+                    m.setattr(reader, "MAX_POINT_IDS", 0)
+                    _spark_writes_gens(slow, m)
                 if op == "add":
                     r.add_documents_batch(docs, ids, metadatas=md)
                 else:
@@ -220,7 +239,7 @@ def test_pyarrow_generations_read_like_spark_ones(
 
     # a Spark-written generation on top of the pyarrow ones, then fold
     with monkeypatch.context() as m:
-        m.setattr(reader, "MAX_POINT_IDS", 0)
+        _spark_writes_gens(fast, m)
         fast.add_documents_batch(["late text here"], ["late"])
     before = _live(fast)
     fast._compact_store(
@@ -230,6 +249,23 @@ def test_pyarrow_generations_read_like_spark_ones(
     assert len(fast._corpus_gens()) == 1
     assert len(list((fast.state / "vectors").glob("gen_*.parquet"))) == 1
     assert _live(fast) == before
+
+
+def test_large_list_batch_writes_pyarrow_gens(spark, tmp_path):
+    """A list-API batch above reader.MAX_POINT_IDS docs (Spark index
+    build) writes its corpus and vector generations with pyarrow too,
+    and reads back whole."""
+    n = reader.MAX_POINT_IDS + 1
+    r = SparkHybridRetriever(spark, str(tmp_path / "s"))
+    r.add_documents_batch([_words(i) for i in range(n)],
+                          [f"u{i}" for i in range(n)])
+    for sub in ("corpus", "vectors"):
+        (g,) = (r.state / sub).glob("gen_*.parquet")
+        assert (g / "part-00000.parquet").exists()
+        assert (g / "_SUCCESS").exists()
+    assert r._index.n_docs == n
+    assert r.get_system_stats()["vector_chunks"] == n
+    assert r.query(["topic7 tail7"], n_results=3)["ids"][0][0] == "u7"
 
 
 @pytest.mark.parametrize("loaded", [False, True], ids=["fresh", "loaded"])

@@ -610,7 +610,7 @@ def test_small_list_writes_skip_spark_joins(spark, tmp_path, jobs,
     generations with pyarrow and merge the index on the driver: each
     launches no Spark job, in three consecutive generations, and
     leaves the same results as a handle forced onto the Spark joins,
-    the Spark generation writes and the distributed DML path."""
+    the Spark tombstone write and the distributed DML path."""
     import time
 
     from bm25_chroma_spark.index import reader
