@@ -110,12 +110,13 @@ def apply_dml(
     terms sum to at most wand.CACHE_MAX_QUERY_POSTINGS postings, and
     whose point reads fit ShardedIndex.postings_cache_bytes, runs on
     the driver (_driver_batch): no Spark job when both inputs are
-    local relations, one limited collect otherwise. Stats then move
-    arithmetically: n_docs and sum_dl change by the ids' new minus
-    prior live counts and lengths, and avgdl = sum_dl / n_docs. Any
-    other batch, or an index whose stats.json lacks sum_dl, takes the
-    distributed path (_distributed_batch), which re-aggregates the
-    live doc_stats and so also writes sum_dl.
+    local relations, one limited collect otherwise; a doc_id repeated
+    in ``upserts`` raises ValueError there before anything is
+    written. Stats then move arithmetically: n_docs and sum_dl change
+    by the ids' new minus prior live counts and lengths, and avgdl =
+    sum_dl / n_docs. Any other batch, or an index whose stats.json
+    lacks sum_dl, takes the distributed path (_distributed_batch),
+    which re-aggregates the live doc_stats and so also writes sum_dl.
 
     Both paths stage the generation in a dot-prefixed dir, publish it
     with one rename and then write stats.json (see recover_index).
@@ -133,7 +134,6 @@ def apply_dml(
     index = ShardedIndex(spark, index_dir)
     stats = _read_stats(base)
     gen_root = base / "gen"
-    gen_root.mkdir(parents=True, exist_ok=True)
     # next generation = 1 + max(stats, dirs on disk): recover_index
     # already reconciled these, but stay defensive — colliding with an
     # existing dir would fail the commit rename
@@ -156,6 +156,7 @@ def apply_dml(
     batch = (
         _driver_batch(index, *inputs) if "sum_dl" in stats else None
     )
+    gen_root.mkdir(parents=True, exist_ok=True)
     if batch is not None:
         batch.write(tmp_dir)
         n_affected = batch.n_affected
@@ -224,6 +225,23 @@ def _collect_local(df: DataFrame, bound: int):
         return None
     return (np.asarray([r[0] for r in got], dtype=np.int64),
             [r[1] for r in got])
+
+
+def _check_unique_ids(ids) -> None:
+    """Raise ValueError naming a doc_id that ``ids`` (int64) holds more
+    than once: one sort and one comparison. The driver build and DML
+    paths call it before their first write; a repeated id is never
+    deduplicated silently (which text would win is the caller's
+    call)."""
+    import numpy as np
+
+    s = np.sort(ids)
+    dup = np.flatnonzero(s[1:] == s[:-1])
+    if len(dup):
+        raise ValueError(
+            f"doc_id {int(s[dup[0]])} appears more than once in one "
+            "input; deduplicate it before indexing"
+        )
 
 
 def _collect_small(frames, bound: int):
@@ -323,6 +341,7 @@ def _driver_batch(index, upserts, delete_docs) -> Optional[_DriverBatch]:
     if got is None:
         return None
     (up_ids, up_texts), (del_ids, del_texts) = got
+    _check_unique_ids(up_ids)
 
     # the build's tokenize core; tokenize_docs semantics: zero-token
     # docs add no postings and leave the index as a deleted doc would

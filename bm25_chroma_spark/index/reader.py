@@ -189,6 +189,103 @@ def doc_stats_rows(
     return {d: int(r["dl"]) for d, r in newest.items()}
 
 
+def _gen_files(store: Path) -> List[Tuple[int, List[Path]]]:
+    """(generation number, data files) of a ``gen_*.parquet`` store,
+    newest first."""
+    return sorted(
+        ((int(g.stem.split("_")[1]), _data_files(g))
+         for g in store.glob("gen_*.parquet")),
+        reverse=True,
+    )
+
+
+def _newest_first(store: Path, columns: Sequence[str]):
+    """The ``columns`` of every store row whose doc_uid no newer
+    generation holds, as one Arrow table (no dedup within one
+    generation, like the single-generation Spark read)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    parts, seen = [], None
+    for _, files in _gen_files(store):
+        tabs = []
+        for f in files:
+            with pq.ParquetFile(str(f)) as pf:
+                tabs.append(pf.read(columns=list(columns),
+                                    use_threads=False))
+        if not tabs:
+            continue
+        t = pa.concat_tables(tabs, promote_options="default")
+        if seen is not None:
+            t = t.filter(pc.invert(pc.is_in(t["doc_uid"], value_set=seen)))
+        parts.append(t)
+        uids = t["doc_uid"].combine_chunks()
+        seen = uids if seen is None else pa.concat_arrays([seen, uids])
+    # Spark-written and pyarrow-written generations can differ in
+    # nullability only (a F.lit column is written required)
+    return pa.concat_tables(parts, promote_options="default") if parts else None
+
+
+def _footer_sum(store: Path, columns: Sequence[str], stat: str) -> int:
+    """Sum of a column-chunk statistic (``num_values`` or
+    ``total_uncompressed_size``) over every leaf of ``columns`` in
+    every generation of ``store``, from the footers alone."""
+    import pyarrow.parquet as pq
+
+    total = 0
+    for _, files in _gen_files(store):
+        for f in files:
+            with pq.ParquetFile(str(f)) as pf:
+                md = pf.metadata
+            leaves = [
+                j for j in range(md.num_columns)
+                if md.schema.column(j).path.split(".", 1)[0] in columns
+            ]
+            total += sum(
+                getattr(md.row_group(i).column(j), stat)
+                for i in range(md.num_row_groups) for j in leaves
+            )
+    return total
+
+
+def vector_rows(vectors_dir: Path, corpus_dir: Path, max_floats: int):
+    """(doc_uids, float64 matrix) of the live vectors — exactly the rows
+    of SparkHybridRetriever.vectors_df(): the newest vectors generation
+    per doc_uid, kept when the uid's newest corpus row exists and is
+    not deleted; rows sorted by doc_uid. None when the footers'
+    ``embedding`` value count (an upper bound on the floats: superseded
+    rows count too) exceeds ``max_floats``, when the corpus's
+    (doc_uid, deleted) chunks exceed the matrix's 8 * ``max_floats``
+    bytes, or when an embedding is null, holds a null or differs in
+    length from the others; the caller's Spark load then decides."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    if _footer_sum(vectors_dir, ("embedding",), "num_values") > max_floats:
+        return None
+    if _footer_sum(corpus_dir, ("doc_uid", "deleted"),
+                   "total_uncompressed_size") > 8 * max_floats:
+        return None
+    empty = [], np.zeros((0, 0))
+    vecs = _newest_first(vectors_dir, ("doc_uid", "embedding"))
+    corpus = _newest_first(corpus_dir, ("doc_uid", "deleted"))
+    if vecs is None or corpus is None:
+        return empty
+    live = corpus.filter(pc.equal(corpus["deleted"], False))["doc_uid"]
+    vecs = vecs.filter(pc.is_in(vecs["doc_uid"], value_set=live))
+    if not vecs.num_rows:
+        return empty
+    vecs = vecs.take(pc.sort_indices(vecs["doc_uid"]))
+    emb = vecs["embedding"].combine_chunks()
+    flat = pc.list_flatten(emb)
+    lens = pc.min_max(pc.list_value_length(emb)).as_py()
+    if emb.null_count or flat.null_count or lens["min"] != lens["max"]:
+        return None
+    mat = np.asarray(flat, dtype=np.float64).reshape(len(vecs), lens["min"])
+    return vecs["doc_uid"].to_pylist(), mat
+
+
 def corpus_rows(
     corpus_dir: Path, uids: Sequence[str], max_bytes: int
 ) -> Optional[Dict[str, Tuple[str, Optional[str]]]]:
@@ -201,9 +298,8 @@ def corpus_rows(
         return {}
     keys = sorted(u.encode("utf-8") for u in uids)
     plan = _Plan()
-    for g in sorted(corpus_dir.glob("gen_*.parquet")):
-        layer = int(g.stem.split("_")[1])
-        for f in _data_files(g):
+    for layer, files in _gen_files(corpus_dir):
+        for f in files:
             plan.add(layer, f, "doc_uid", keys,
                      ("doc_uid", "text", "meta_json", "deleted"))
     if plan.nbytes > max_bytes:

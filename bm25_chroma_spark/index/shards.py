@@ -669,8 +669,10 @@ def build_sharded_index(
 
     A fresh build (``out_dir`` missing or empty) of a local relation
     of at most reader.MAX_POINT_IDS rows runs on the driver
-    (_build_on_driver) and launches no Spark job; any other input,
-    and every resume, runs the Spark path below.
+    (_build_on_driver) and launches no Spark job; a doc_id repeated in
+    it raises ValueError before anything is written. Any other input,
+    and every resume, runs the Spark path below (it does not check
+    for repeated ids: that would cost a stage).
 
     ``_fail_after_groups`` is a test hook that aborts mid-build to
     exercise the resume path.
@@ -681,12 +683,17 @@ def build_sharded_index(
     local = None
     if fresh and _fail_after_groups is None:
         from bm25_chroma_spark.index import reader
-        from bm25_chroma_spark.index.dml import _collect_local
+        from bm25_chroma_spark.index.dml import (
+            _check_unique_ids,
+            _collect_local,
+        )
 
         local = _collect_local(docs.select(
             F.col(id_col).cast("long").alias("doc_id"),
             F.col(text_col).alias("text"),
         ), reader.MAX_POINT_IDS)
+        if local is not None:
+            _check_unique_ids(local[0])
     (base / "manifests").mkdir(parents=True, exist_ok=True)
     if local is not None:
         return _build_on_driver(

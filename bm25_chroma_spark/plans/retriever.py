@@ -55,7 +55,12 @@ from bm25_chroma_spark.index.dml import (
     write_arrow_dir,
 )
 from bm25_chroma_spark.index.shards import ShardedIndex, build_sharded_index
-from bm25_chroma_spark.index.wand import search_sharded, search_sharded_rows
+from bm25_chroma_spark.index.wand import (
+    _round_margin,
+    round_half_up,
+    search_sharded,
+    search_sharded_rows,
+)
 from bm25_chroma_spark.operators.fusion import rrf_fuse_py
 
 
@@ -158,6 +163,9 @@ def _doc_id_expr(uid_col):
 
 CORPUS_DDL = "doc_uid string, text string, meta_json string, deleted boolean"
 VECTORS_DDL = "doc_uid string, embedding array<double>"
+QUERY_DF_DDL = (
+    "query_id long, doc_uid string, score double, distance double, rank int"
+)
 
 
 class _VecCache:
@@ -202,7 +210,7 @@ class _VecCache:
             int(q[i]): self.uids[int(self._id_order[pos[i]])] for i in hit
         }
 
-    def topk(self, qvec, k: int):
+    def topk(self, qvec, k: int, score_round: Optional[int] = None):
         """Exact twin of knn_bruteforce's scoring + ordering: dot and
         norms via sequential left folds (IEEE-identical to the JVM
         aggregate), cos = dot / (norm_v * norm_q), dist = 1 - cos,
@@ -210,9 +218,13 @@ class _VecCache:
         (zero-norm vectors) sort last in BOTH engines: Spark treats
         NaN as greater than any double, and numpy's stable sorts park
         NaNs at the end preserving the vec_id-ordered prior pass.
+        ``score_round`` rounds dist before the order and then sim, as
+        knn_bruteforce(score_round=...) does with F.round; only docs
+        within one rounding unit of the kth raw dist can place, so
+        only they are rounded (wand.round_half_up is per value).
         -> [(doc_uid, sim)] of length <= k."""
         n, d = self.mat.shape
-        if n == 0:
+        if n == 0 or k <= 0:
             return []
         q64 = np.asarray(qvec, dtype=np.float64)
         qn = 0.0
@@ -226,9 +238,23 @@ class _VecCache:
         with np.errstate(divide="ignore", invalid="ignore"):
             cos = acc / (self.doc_norms * qnorm)
             dist = 1.0 - cos
+        cand = np.arange(n)
+        finite = ~np.isnan(dist)
+        if np.count_nonzero(finite) > k:
+            kth = np.partition(dist[finite], k - 1)[k - 1]
+            cand = np.flatnonzero(dist <= kth + _round_margin(score_round))
+        dist = dist[cand]
+        if score_round is not None:
+            dist = np.array(
+                [round_half_up(x, score_round) for x in dist.tolist()]
+            )
+        with np.errstate(invalid="ignore"):
             sim = 1.0 / (1.0 + dist)
-        order = np.lexsort((self.vec_ids, dist))[:k]
-        return [(self.uids[i], float(sim[i])) for i in order]
+        order = np.lexsort((self.vec_ids[cand], dist))[:k]
+        out = [(self.uids[cand[i]], float(sim[i])) for i in order]
+        if score_round is not None:
+            out = [(u, round_half_up(s, score_round)) for u, s in out]
+        return out
 
 
 def resolve_doc_id(meta: Dict, default: str = "unknown") -> str:
@@ -377,9 +403,14 @@ class SparkHybridRetriever:
             "left_anti" if anti else "left_semi",
         )
 
-    def corpus_df(self) -> DataFrame:
-        """Live corpus: newest generation per doc_uid, tombstones out.
-        Carries the optional user metadata column (meta_json).
+    def _read_gen(self, p: Path, ddl: str) -> DataFrame:
+        """One corpus/vectors generation, read with its explicit schema:
+        no schema-inference job, and a column the file lacks (a legacy
+        corpus generation's meta_json) reads as null."""
+        return self.spark.read.schema(ddl).parquet(str(p))
+
+    def _newest_rows(self, gens: List[Path], ddl: str) -> DataFrame:
+        """The newest generation's row per doc_uid over ``gens``.
 
         Single-generation fast path: with one gen on disk (fresh
         build, or any state after _compact_store folded the stack)
@@ -388,35 +419,30 @@ class SparkHybridRetriever:
         join every query() pays then stays a narrow scan, which at 1M
         docs is the difference between a per-query exchange of the
         whole corpus and none."""
+        if len(gens) == 1:
+            return self._read_gen(gens[0], ddl)
+        u = None
+        for p in gens:
+            df = self._read_gen(p, ddl).withColumn(
+                "gen", F.lit(int(p.stem.split("_")[1]))
+            )
+            u = df if u is None else u.unionByName(df)
+        w = Window.partitionBy("doc_uid").orderBy(F.desc("gen"))
+        return u.withColumn("rn", F.row_number().over(w)).filter(
+            F.col("rn") == 1
+        )
+
+    def corpus_df(self) -> DataFrame:
+        """Live corpus: newest generation per doc_uid, tombstones out.
+        Carries the optional user metadata column (meta_json)."""
         gens = self._corpus_gens()
         if not gens:
             return self.spark.createDataFrame(
                 [], "doc_uid string, text string, meta_json string"
             )
-        if len(gens) == 1:
-            df = self.spark.read.parquet(str(gens[0]))
-            if "meta_json" not in df.columns:
-                df = df.withColumn("meta_json", F.lit(None).cast("string"))
-            return df.filter(~F.col("deleted")).select(
-                "doc_uid", "text", "meta_json"
-            )
-        parts = []
-        for p in gens:
-            df = self.spark.read.parquet(str(p)).withColumn(
-                "gen", F.lit(int(p.stem.split("_")[1]))
-            )
-            if "meta_json" not in df.columns:
-                df = df.withColumn("meta_json", F.lit(None).cast("string"))
-            parts.append(df)
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        w = Window.partitionBy("doc_uid").orderBy(F.desc("gen"))
-        return (
-            u.withColumn("rn", F.row_number().over(w))
-            .filter((F.col("rn") == 1) & (~F.col("deleted")))
-            .select("doc_uid", "text", "meta_json")
-        )
+        return self._newest_rows(gens, CORPUS_DDL).filter(
+            ~F.col("deleted")
+        ).select("doc_uid", "text", "meta_json")
 
     def _next_gen(self, sub: str) -> Path:
         gens = sorted((self.state / sub).glob("gen_*.parquet"))
@@ -428,36 +454,11 @@ class SparkHybridRetriever:
     def vectors_df(self) -> DataFrame:
         gens = sorted((self.state / "vectors").glob("gen_*.parquet"))
         if not gens:
-            return self.spark.createDataFrame(
-                [], "doc_uid string, embedding array<double>"
-            )
-        if len(gens) == 1:
-            # single gen: no overlay window needed (see corpus_df);
-            # the corpus join below still drops deleted docs' vectors
-            return (
-                self.spark.read.parquet(str(gens[0]))
-                .select("doc_uid", "embedding")
-                .join(self.corpus_df().select("doc_uid"), "doc_uid")
-            )
-        parts = [
-            self.spark.read.parquet(str(p)).withColumn(
-                "gen", F.lit(int(p.stem.split("_")[1]))
-            )
-            for p in gens
-        ]
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        w = Window.partitionBy("doc_uid").orderBy(F.desc("gen"))
-        live = (
-            u.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("doc_uid", "embedding")
-        )
+            return self.spark.createDataFrame([], VECTORS_DDL)
         # vectors of deleted docs drop out via the corpus join
-        return live.join(
-            self.corpus_df().select("doc_uid"), "doc_uid", "inner"
-        )
+        return self._newest_rows(gens, VECTORS_DDL).select(
+            "doc_uid", "embedding"
+        ).join(self.corpus_df().select("doc_uid"), "doc_uid", "inner")
 
     # ------------------------------------------------------------ #
     # ingest                                                        #
@@ -615,7 +616,7 @@ class SparkHybridRetriever:
 
         gen_path = self._next_gen("corpus")
         batch.write.mode("overwrite").parquet(str(gen_path))
-        written = self.spark.read.parquet(str(gen_path))  # pinned
+        written = self._read_gen(gen_path, CORPUS_DDL)  # pinned
         n = written.count()
 
         if embed:
@@ -804,7 +805,7 @@ class SparkHybridRetriever:
             victims.withColumn("deleted", F.lit(True)).write.mode(
                 "overwrite"
             ).parquet(str(gen_path))
-            delete_df = self.spark.read.parquet(str(gen_path)).select(
+            delete_df = self._read_gen(gen_path, CORPUS_DDL).select(
                 self._id_expr(F.col("doc_uid")).alias("doc_id"), "text"
             )
         apply_dml(
@@ -997,32 +998,51 @@ class SparkHybridRetriever:
 
     def _vector_cache(self) -> Optional[_VecCache]:
         """The live (doc_uid, vec_id, embedding) matrix driver-side,
-        loaded once per corpus state and ONLY when it fits the
-        ``vector_cache_max_floats`` bound (default ~128 MB as f64);
-        over-bound corpora mark 'too-big' and keep the distributed
-        exact path — at 100 TB the cache simply refuses. vec_ids ship
-        as strings (Arrow nullable-long float64 rounding, see
-        _VecCache docstring)."""
-        if self._vec_cache == "too-big":
-            return None
-        if self._vec_cache is not None:
-            return self._vec_cache
+        loaded once per corpus state by _load_vec_matrix; None when it
+        is past ``vector_cache_max_floats`` (marked 'too-big': the
+        exact leg then stays distributed — at 100 TB the cache simply
+        refuses)."""
+        if self._vec_cache is None:
+            self._vec_cache = self._load_vec_matrix()
+        return self._vec_cache if self._vec_cache != "too-big" else None
+
+    def _load_vec_matrix(self):
+        """The live vector matrix as a _VecCache, or 'too-big' past
+        ``vector_cache_max_floats`` (default ~128 MB as f64). While the
+        vectors' parquet footers bound the floats within it, the rows
+        come from reader.vector_rows (pyarrow, no Spark job) and the
+        vec_ids from a local-relation projection of doc_id_expr (no
+        job either). Past the footer bound — superseded generations
+        count there too — Spark counts the live rows and decides
+        exactly, then collects the matrix (_spark_vec_matrix)."""
+        got = reader.vector_rows(
+            self.state / "vectors", self.state / "corpus",
+            self.vector_cache_max_floats,
+        )
+        if got is not None:
+            uids, mat = got
+            if not uids:
+                return _VecCache([], np.zeros(0, np.int64), mat)
+            ids = self.spark.createDataFrame(
+                pd.DataFrame({"doc_uid": pd.Series(uids, dtype=object)}),
+                "doc_uid string",
+            ).select(self._id_expr(F.col("doc_uid")).cast("long")).collect()
+            return _VecCache(
+                uids, np.asarray([r[0] for r in ids], dtype=np.int64), mat
+            )
         vecs = self.vectors_df()
         n = vecs.count()
         if n == 0:
-            self._vec_cache = _VecCache([], np.zeros(0, np.int64),
-                                        np.zeros((0, 0)))
-            return self._vec_cache
+            return _VecCache([], np.zeros(0, np.int64), np.zeros((0, 0)))
         dim = len(vecs.select("embedding").first()["embedding"])
         if n * dim > self.vector_cache_max_floats:
-            self._vec_cache = "too-big"
-            return None
-        self._vec_cache = self._load_vec_matrix()
-        return self._vec_cache
+            return "too-big"
+        return self._spark_vec_matrix()
 
-    def _load_vec_matrix(self) -> "_VecCache":
-        """Collect the live vector matrix driver-side (ONE toPandas
-        job). Callers are responsible for the eligibility bound."""
+    def _spark_vec_matrix(self) -> "_VecCache":
+        """Collect the live vector matrix with Spark (one toPandas
+        job). vec_ids ship as strings (Arrow nullable-long float64
+        rounding, see _VecCache)."""
         pdf = self.vectors_df().select(
             "doc_uid",
             self._id_expr(F.col("doc_uid")).cast("string").alias("vec_id"),
@@ -1142,20 +1162,21 @@ class SparkHybridRetriever:
         return texts, metas
 
     def _bm25_lists(
-        self, query_texts: List[str], top_k: int
+        self, query_texts: List[str], top_k: int,
+        score_round: Optional[int] = None,
     ) -> List[List[Tuple[str, float]]]:
         """BM25 leg for ALL queries in one search_sharded_rows call:
         the driver-local path hands back its rows as a Python list
         (zero Spark jobs while the postings fit the reader's bounds)
         and uids resolve through the warm LRU and the vector cache, so
         an interactive query never touches the corpus-sized uid
-        map."""
+        map. ``score_round``: search_sharded's round-before-rank."""
         out: List[List[Tuple[str, float]]] = [[] for _ in query_texts]
         if self._index is None:
             return out
         rows = search_sharded_rows(
             self._index, list(enumerate(query_texts)), top_k=top_k,
-            strategy=self.bm25_strategy,
+            strategy=self.bm25_strategy, score_round=score_round,
         )
         uid_of = self._uids_for_doc_ids([d for _, d, _, _ in rows])
         for qid, d, score, _ in sorted(rows, key=lambda r: (r[0], r[3])):
@@ -1188,7 +1209,8 @@ class SparkHybridRetriever:
         return self._ann_state[1]
 
     def _vector_lists(
-        self, query_texts: List[str], top_k: int
+        self, query_texts: List[str], top_k: int,
+        score_round: Optional[int] = None,
     ) -> List[List[Tuple[str, float]]]:
         """Vector leg for ALL queries in ONE knn call — exact
         brute-force below ``ann_threshold`` (reference-deterministic),
@@ -1197,7 +1219,8 @@ class SparkHybridRetriever:
         from the driver-resident vector cache when the live matrix
         fits its bound — a warm interactive query launches zero Spark
         jobs and returns bit-identical results (_VecCache.topk is a
-        sequential-fold twin of knn_bruteforce)."""
+        sequential-fold twin of knn_bruteforce). ``score_round``
+        rounds dist before the order and then sim, in every engine."""
         out: List[List[Tuple[str, float]]] = [[] for _ in query_texts]
         if not list((self.state / "vectors").glob("gen_*.parquet")):
             return out
@@ -1213,7 +1236,7 @@ class SparkHybridRetriever:
                 self.last_vector_route = "exact"
                 self.last_vector_engine = "driver-cache"
                 return [
-                    cache.topk(q, top_k)
+                    cache.topk(q, top_k, score_round)
                     for q in self.embed(query_texts)
                 ]
         vecs = self.vectors_df()
@@ -1237,6 +1260,7 @@ class SparkHybridRetriever:
                 n_cells=n_cells,
                 nprobe=self.ann_nprobe or max(2, n_cells // 4),
                 centroids=centroids,
+                score_round=score_round,
             )
         else:
             self.last_vector_route = "exact"
@@ -1246,6 +1270,7 @@ class SparkHybridRetriever:
                 k=top_k,
                 id_col="vec_id",
                 vec_col="embedding",
+                score_round=score_round,
             )
         uid = self._uid_map().withColumnRenamed("doc_id", "vec_id")
         rows = F.broadcast(res).join(uid, "vec_id").select(
@@ -1255,6 +1280,29 @@ class SparkHybridRetriever:
             out[r["query_id"]].append((r["doc_uid"], r["sim"]))
         return out
 
+    @staticmethod
+    def _fuse(
+        bm25_lists: List[List[Tuple[str, float]]],
+        vector_lists: List[List[Tuple[str, float]]],
+        n_results: int,
+    ) -> List[List[Tuple[str, float]]]:
+        """Per query: RRF(ratio 0.5, k 60) of the two legs where both
+        answered, else the answering leg's raw scores cut to
+        ``n_results`` (reference hybrid_retriever.py:379-428)."""
+        fused_all = []
+        for bm25_results, vector_results in zip(bm25_lists, vector_lists):
+            if bm25_results and vector_results:
+                fused = rrf_fuse_py(
+                    [bm25_results, vector_results],
+                    bm25_ratio=0.5,
+                    k=60,
+                    top_k=n_results,
+                )
+            else:
+                fused = (bm25_results or vector_results)[:n_results]
+            fused_all.append(fused)
+        return fused_all
+
     def query(self, query_texts, n_results: int, include=None, **kwargs
               ) -> Dict:
         """ChromaDB-compatible facade (reference
@@ -1262,13 +1310,14 @@ class SparkHybridRetriever:
         of kwargs — the reference accepts-and-ignores them.
 
         Batched: all queries ride one BM25 search and one KNN pass;
-        per-query RRF runs driver-side on the tiny top-2k lists. On a
-        loaded state (vector cache resident) an interactive call
-        launches no Spark job, fresh terms included: postings, dfs and
-        texts come through the driver-side parquet reader, uids from
-        the vector cache. Embeddings are fetched ONLY when
-        requested via ``include``, and only for the fused top-k uids —
-        never a full-table collect."""
+        per-query RRF runs driver-side on the tiny top-2k lists. An
+        interactive call launches no Spark job, fresh terms, a fresh
+        handle and the first call after a write included: the vector
+        matrix loads with pyarrow (_load_vec_matrix, within its
+        bounds), postings, dfs and texts come through the driver-side
+        parquet reader, uids from the vector cache. Embeddings are
+        fetched ONLY when requested via ``include``, and only for the
+        fused top-k uids — never a full-table collect."""
         if not isinstance(query_texts, list):
             query_texts = [query_texts]
         include = include or ["documents", "metadatas", "distances"]
@@ -1282,21 +1331,7 @@ class SparkHybridRetriever:
         vector_lists = self._vector_lists(query_texts, n_results * 2)
         bm25_lists = self._bm25_lists(query_texts, n_results * 2)
 
-        fused_all: List[List[Tuple[str, float]]] = []
-        for bm25_results, vector_results in zip(bm25_lists, vector_lists):
-            if bm25_results and vector_results:
-                fused = rrf_fuse_py(
-                    [bm25_results, vector_results],
-                    bm25_ratio=0.5,
-                    k=60,
-                    top_k=n_results,
-                )
-            elif bm25_results:
-                fused = bm25_results[:n_results]
-            else:
-                fused = vector_results[:n_results]
-            fused_all.append(fused)
-
+        fused_all = self._fuse(bm25_lists, vector_lists, n_results)
         all_uids = sorted({u for fused in fused_all for u, _ in fused})
         texts, metas = self._texts_for_uids(all_uids)
         vec_map: Dict[str, list] = {}
@@ -1368,20 +1403,29 @@ class SparkHybridRetriever:
         score_round: Optional[int] = None,
     ) -> DataFrame:
         """DataFrame-in/DataFrame-out batch query surface for offline
-        evaluation over large query sets (VERDICT r5 #5): the same
-        hybrid semantics as ``query()`` — each leg at n_results*2,
+        evaluation over query sets (VERDICT r5 #5): the same hybrid
+        semantics as ``query()`` — each leg at n_results*2,
         RRF(ratio=0.5, k=60) where BOTH legs answered a query, the
         single leg's raw scores truncated to n_results where only one
-        did, distance = 1 - score — but the results are never
-        collected into Python: legs stay DataFrames end-to-end (small
-        batches broadcast their |Q|*k leg rows into the uid-map join,
-        bounded by _QDF_BROADCAST_ROWS; huge batches keep the shuffle
-        join) and fusion is the distributed rrf_fuse (sums of exactly
-        two parts, so scores
-        are bit-identical to the driver-side rrf_fuse_py). Query
-        TEXTS are collected driver-side (tokenizer + embedder
-        contract, same as every query path); RESULTS are |Q| x k and
-        stay distributed.
+        did, distance = 1 - score. Query TEXTS are collected
+        driver-side (tokenizer + embedder contract, same as every query
+        path).
+
+        Two regimes return the same rows:
+
+        * a batch of at most reader.MAX_POINT_IDS queries with unique
+          ids, whose 2 * |Q| * 2 * n_results leg rows fit
+          _QDF_BROADCAST_ROWS, is answered on the driver by query()'s
+          own leg helpers and fusion (_query_df_driver): each leg picks
+          its engine as in query() — no Spark job on a loaded state —
+          and the rows come back as a local relation;
+        * any other batch runs the distributed plan: legs stay
+          DataFrames end-to-end (their |Q|*k rows broadcast into the
+          uid-map join while within _QDF_BROADCAST_ROWS; beyond it the
+          shuffle join) and fusion is a distributed RRF (sums of
+          exactly two parts, so scores are bit-identical to the
+          driver-side rrf_fuse_py); results are never collected into
+          Python.
 
         queries: DataFrame (query_id long, query_text string) or a
         plain list of texts (query_id = position).
@@ -1393,18 +1437,24 @@ class SparkHybridRetriever:
         external mirror — e.g. the SQL oracle — can only reproduce
         leg ranks on rounded scores). Default None keeps raw floats.
         """
-        if not isinstance(queries, DataFrame):
-            queries = self.spark.createDataFrame(
-                list(enumerate(queries)),
-                "query_id long, query_text string",
-            )
-        qrows = [
-            (int(r[0]), r[1] if r[1] is not None else "")
-            for r in queries.select(
-                F.col(queries.columns[0]).cast("long"),
-                F.col(queries.columns[1]),
-            ).collect()
-        ]
+        if isinstance(queries, DataFrame):
+            qrows = [
+                (int(r[0]), r[1] if r[1] is not None else "")
+                for r in queries.select(
+                    F.col(queries.columns[0]).cast("long"),
+                    F.col(queries.columns[1]),
+                ).collect()
+            ]
+        else:
+            qrows = [
+                (i, t if t is not None else "") for i, t in enumerate(queries)
+            ]
+        if (
+            len(qrows) <= reader.MAX_POINT_IDS
+            and len({q for q, _ in qrows}) == len(qrows)
+            and 2 * len(qrows) * 2 * n_results <= self._QDF_BROADCAST_ROWS
+        ):
+            return self._query_df_driver(qrows, n_results, score_round)
         top_k = n_results * 2
         legs = []
 
@@ -1488,11 +1538,7 @@ class SparkHybridRetriever:
         # rank, and the fused rank orders on (rrf_score desc,
         # doc_uid asc) exactly like rrf_fuse.
         if not legs:
-            return self.spark.createDataFrame(
-                [],
-                "query_id long, doc_uid string, score double, "
-                "distance double, rank int",
-            )
+            return self.spark.createDataFrame([], QUERY_DF_DDL)
         u = legs[0]
         for p in legs[1:]:
             u = u.unionByName(p)
@@ -1547,6 +1593,36 @@ class SparkHybridRetriever:
             .select("query_id", "doc_uid", "score", "distance", "rank")
         )
 
+    def _query_df_driver(
+        self, qrows: List[Tuple[int, str]], n_results: int,
+        score_round: Optional[int],
+    ) -> DataFrame:
+        """query_df's driver regime: query()'s legs and fusion over the
+        collected (query_id, text) rows, returned as a local relation
+        built from Arrow (a pyarrow table keeps NaN scores NaN; a
+        pandas frame would send them as nulls). An empty result is an
+        empty LocalTableScan (the limit(0) trick of
+        wand._empty_results_df), so collecting it launches no job."""
+        import pyarrow as pa
+
+        self._warm_caches()
+        texts = [t for _, t in qrows]
+        vector_lists = self._vector_lists(texts, n_results * 2, score_round)
+        bm25_lists = self._bm25_lists(texts, n_results * 2, score_round)
+        rows = [
+            (qid, uid, score, 1.0 - score, rank)
+            for (qid, _), fused in zip(
+                qrows, self._fuse(bm25_lists, vector_lists, n_results)
+            )
+            for rank, (uid, score) in enumerate(fused, start=1)
+        ]
+        schema = _arrow_schema(QUERY_DF_DDL)
+        cols = list(zip(*rows)) if rows else [[0], [""], [0.0], [0.0], [0]]
+        df = self.spark.createDataFrame(pa.Table.from_pydict(
+            dict(zip(schema.names, cols)), schema=schema
+        ), QUERY_DF_DDL)
+        return df if rows else df.limit(0)
+
     # ------------------------------------------------------------ #
     # stats                                                         #
     # ------------------------------------------------------------ #
@@ -1593,10 +1669,9 @@ class SparkHybridRetriever:
         # live state and is never persisted — what persists is the
         # ELIGIBILITY DECISION (fits / too-big, with shape), stamped
         # with the exact interactive key it was made under, so
-        # prewarm() can either reload the matrix with ONE toPandas
-        # job (skipping the count + dim-probe jobs) or mark too-big
-        # with ZERO jobs. A key mismatch at prewarm time simply
-        # ignores the file — staleness semantics unchanged.
+        # prewarm() can either reload the matrix (_load_vec_matrix) or
+        # mark too-big with ZERO jobs. A key mismatch at prewarm time
+        # simply ignores the file — staleness semantics unchanged.
         vc = self._vec_cache
         vec_meta = None
         if vc == "too-big":
@@ -1691,8 +1766,9 @@ class SparkHybridRetriever:
         # key matches the live corpus state byte-for-byte AND the id
         # expression fingerprint matches (vec_ids are minted through
         # doc_id_expr). too-big -> marked with zero jobs; eligible ->
-        # the matrix reloads with ONE toPandas job, so the first
-        # repeat HYBRID query on the reloaded handle launches none.
+        # the matrix reloads (_load_vec_matrix: no job while its
+        # footers fit the bound), so the first repeat HYBRID query on
+        # the reloaded handle launches none.
         fv = self.state / "warm_vec.json"
         if fv.exists():
             try:

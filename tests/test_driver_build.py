@@ -298,3 +298,43 @@ def test_repeated_uid_in_one_batch_keeps_last(spark, tmp_path, loaded,
     if shared:
         rows = r._index.postings_rows(["common"])["common"]
         assert sum(x.df for x in rows) == 1
+
+
+def _tree(d: Path) -> dict:
+    """Every path under ``d`` with its bytes (None for a directory)."""
+    return {
+        str(p.relative_to(d)): None if p.is_dir() else p.read_bytes()
+        for p in sorted(d.rglob("*"))
+    }
+
+
+def test_repeated_doc_id_fails_before_any_write(spark, tmp_path):
+    """A doc_id repeated in one direct local input to the driver build
+    or the driver DML path raises ValueError naming the id before the
+    first write: the target directory is left exactly as it was (the
+    build's stays empty, the index's files unchanged). Nothing is
+    deduplicated silently."""
+    from bm25_chroma_spark.index.dml import apply_dml
+
+    cfg = BM25Config(num_term_buckets=6, salt_factor=3,
+                     max_postings_per_term=None, query_postings_cap=None)
+    rows = pd.DataFrame({"doc_id": [1, 1], "text": ["alpha beta",
+                                                    "alpha gamma"]})
+    out = tmp_path / "fresh"
+    out.mkdir()
+    with pytest.raises(ValueError, match="doc_id 1 "):
+        build_sharded_index(spark.createDataFrame(rows, DDL), str(out),
+                            config=cfg, bucket_groups=2)
+    assert _tree(out) == {}
+
+    idx = tmp_path / "idx"
+    build_sharded_index(
+        spark.createDataFrame(pd.DataFrame(
+            {"doc_id": [5, 6], "text": ["alpha delta", "beta"]}
+        ), DDL),
+        str(idx), config=cfg, bucket_groups=2,
+    )
+    before = _tree(idx)
+    with pytest.raises(ValueError, match="doc_id 1 "):
+        apply_dml(spark, str(idx), upserts=spark.createDataFrame(rows, DDL))
+    assert _tree(idx) == before
