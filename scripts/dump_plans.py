@@ -202,26 +202,26 @@ def main() -> None:
             docs["doc_id"].cast("string").alias("doc_uid"), "text"
         )
     )
-    # a batch of <= reader.MAX_POINT_IDS queries is answered on the
-    # driver and plans as a LocalTableScan; one past that bound shows
-    # the distributed plan
-    from bm25_chroma_spark.index.reader import MAX_POINT_IDS
-
-    big_batch = ["spark join hash", "window agg sort"] * (
-        MAX_POINT_IDS // 2 + 1
-    )
+    # a batch whose leg rows fit _QDF_BROADCAST_ROWS is answered on
+    # the driver and plans as a LocalTableScan; the distributed
+    # regime below is what any batch past that bound (or with a
+    # repeated query id) runs, shown for a batch large enough that
+    # the BM25 leg plans as a Spark search too
+    qrows = [(i, t) for i, t in enumerate(["spark join hash",
+                                           "window agg sort"] * 513)]
     sections.append((
-        "query_df batch hybrid surface, distributed regime (a batch "
-        f"of {len(big_batch)} queries, past reader.MAX_POINT_IDS): "
+        "query_df batch hybrid surface, distributed regime (what a "
+        "batch past the driver gate runs: a repeated query id, or "
+        f"leg rows past _QDF_BROADCAST_ROWS; {len(qrows)} queries): "
         "both legs stay DataFrames end-to-end — bucket-pruned BM25 "
         "leg + broadcast-query KNN leg fused by the distributed "
         "rrf_fuse (union + hash-agg + window rank); only query TEXTS "
         "touch the driver (tokenizer/embedder contract), results are "
-        "|Q| x k and never collect. A batch within the bound (unique "
+        "|Q| x k and never collect. A batch within the gate (unique "
         "query ids, leg rows within _QDF_BROADCAST_ROWS) takes the "
         "driver regime instead: query()'s leg helpers and fusion, "
         "returned as a LocalTableScan",
-        explain_str(r.query_df(big_batch, n_results=5)),
+        explain_str(r._query_df_distributed(qrows, 5, None)),
     ))
 
     from bm25_chroma_spark.operators.span_dedup import (

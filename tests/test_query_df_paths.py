@@ -1,8 +1,8 @@
 """query_df's two regimes and the job-free vector matrix load.
 
-A batch of at most reader.MAX_POINT_IDS queries with unique ids is
-answered on the driver by query()'s own leg helpers and fusion; a
-larger one runs the distributed plan. Both must return the same rows,
+A batch with unique query ids whose leg rows fit _QDF_BROADCAST_ROWS
+is answered on the driver by query()'s own leg helpers and fusion; any
+other batch runs the distributed plan. Both must return the same rows,
 float for float, with raw scores and with score_round. The vector
 matrix loads with pyarrow (reader.vector_rows) while the parquet
 footers bound it within vector_cache_max_floats, and with Spark above
@@ -82,44 +82,47 @@ def _rows(df):
 
 
 def _both_regimes(spark, r, qrows, n_results, score_round):
-    """(driver rows, distributed rows) of one batch: the distributed
-    side answers the same queries padded past reader.MAX_POINT_IDS."""
+    """(driver rows, distributed rows) of one batch: query_df takes
+    the driver regime, and the distributed regime answers the same
+    collected rows."""
     qdf = spark.createDataFrame(pd.DataFrame(
         {"query_id": [q for q, _ in qrows], "query_text": [t for _, t in qrows]}
     ), "query_id long, query_text string")
     small = r.query_df(qdf, n_results=n_results, score_round=score_round)
     assert _is_local(small)
-    used = {q for q, _ in qrows}
-    pad = [q for q in range(20_000_000, 20_002_000) if q not in used]
-    pad = pad[:reader.MAX_POINT_IDS + 1 - len(qrows)]
-    big_rows = qrows + [(q, f"w{q % 40} filler") for q in pad]
-    big = r.query_df(spark.createDataFrame(pd.DataFrame(
-        {"query_id": [q for q, _ in big_rows],
-         "query_text": [t for _, t in big_rows]}
-    ), "query_id long, query_text string"), n_results=n_results,
-        score_round=score_round)
+    big = r._query_df_distributed(
+        [(q, t if t is not None else "") for q, t in qrows],
+        n_results, score_round,
+    )
     assert not _is_local(big)
-    return _rows(small), _rows(big.filter(big.query_id < 20_000_000))
+    return _rows(small), _rows(big)
 
 
-@pytest.mark.parametrize("numeric,embed", [
-    (False, True), (True, True), (False, False),
+@pytest.mark.parametrize("numeric,embed,ann", [
+    (False, True, None), (True, True, None), (False, False, None),
+    (False, True, 10), (True, True, 10),
 ])
 def test_driver_query_df_equals_distributed(spark, tmp_path, numeric,
-                                            embed):
+                                            embed, ann):
     """Driver query_df == distributed query_df, row for row and float
     for float, with raw scores and score_round=6: queries answered by
     both legs, by the vector leg only (unknown terms), by the BM25 leg
     only (a state without vectors), by neither, and blank or None
     texts (the default embedder's zero vector: NaN scores), under caller-assigned
     non-contiguous ids, on a multi-generation state, with xxhash64 and
-    with cast(doc_uid as long) ids."""
+    with cast(doc_uid as long) ids. ``ann``: an ann_threshold below
+    the corpus size, so both regimes take the IVF route (knn_ivf fed a
+    list of query vectors on the driver, a DataFrame with the caller's
+    ids in the distributed plan) over the same trained centroids."""
     rng = random.Random(hash((numeric, embed)) & 0xFFFF)
     r = _churned(spark, tmp_path / "s", rng, numeric=numeric, embed=embed)
+    r.ann_threshold = ann
     qrows = _queries(rng)
     for score_round in (None, 6):
         small, big = _both_regimes(spark, r, qrows, 4, score_round)
         assert small == big, score_round
+        if ann is not None:
+            assert r.last_vector_route == "ivf"
         answered = {row[0] for row in small}
         assert answered, "the fixture must produce hits"
         if not embed:  # BM25 only: unknown and blank texts get nothing
@@ -152,15 +155,14 @@ def test_driver_query_df_matches_query_and_launches_no_job(spark, tmp_path,
 
 
 def test_query_df_bounds_keep_distributed_plan(spark, tmp_path):
-    """The driver regime's gate: at most reader.MAX_POINT_IDS queries,
-    unique query ids, and 2 * |Q| * 2 * n_results within
-    _QDF_BROADCAST_ROWS. A 1025-query batch, a repeated query id and
-    an oversized n_results each keep the distributed plan; an empty
-    batch is an empty local relation."""
+    """The driver regime's gate: unique query ids, and
+    2 * |Q| * 2 * n_results within _QDF_BROADCAST_ROWS. The query count
+    is bounded only through the leg rows, so a 1025-query batch stays
+    on the driver; a repeated query id and an oversized n_results each
+    keep the distributed plan; an empty batch is an empty local
+    relation."""
     r = _churned(spark, tmp_path / "s", random.Random(9))
-    at = ["alpha w1"] * reader.MAX_POINT_IDS
-    assert _is_local(r.query_df(at, n_results=2))
-    assert not _is_local(r.query_df(at + ["beta"], n_results=2))
+    assert _is_local(r.query_df(["alpha w1"] * 1025, n_results=2))
     dup = spark.createDataFrame(pd.DataFrame(
         {"query_id": [3, 3], "query_text": ["alpha", "beta"]}
     ), "query_id long, query_text string")
@@ -168,6 +170,9 @@ def test_query_df_bounds_keep_distributed_plan(spark, tmp_path):
     n_max = r._QDF_BROADCAST_ROWS // (2 * 2 * 2)
     assert _is_local(r.query_df(["alpha", "beta"], n_results=n_max))
     assert not _is_local(r.query_df(["alpha", "beta"], n_results=n_max + 1))
+    r._QDF_BROADCAST_ROWS = 2 * 3 * 2 * 2  # |Q| = 3 at n_results = 2
+    assert _is_local(r.query_df(["alpha"] * 3, n_results=2))
+    assert not _is_local(r.query_df(["alpha"] * 4, n_results=2))
     empty = r.query_df([], n_results=3)
     assert _is_local(empty) and empty.collect() == []
     assert empty.schema == r.query_df(["alpha"], n_results=3).schema
