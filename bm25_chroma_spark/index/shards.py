@@ -1221,95 +1221,6 @@ class ShardedIndex:
                 out[t] = rows
         return out
 
-    # ---- hot-set persistence (opt-in interactive pre-warm) ---------
-    #
-    # The postings LRU dies with the driver process, so a retriever
-    # reconstructed on a fresh driver starts cold and its first
-    # repeat query pays the full distributed floor. save_hot_set
-    # persists the LRU's TERM LIST (names only — never posting bytes,
-    # so the file is a few KB and carries no stale data risk);
-    # prewarm on a fresh handle refills the LRU and the df cache
-    # through postings_rows (driver-side reads below its byte bound).
-    # Staleness semantics are unchanged by construction: the hot set
-    # is a HINT — prewarm fetches rows from the live generation
-    # overlay through postings_rows, whose entries stay
-    # generation-tagged, so a hot set saved before a DML can never
-    # surface pre-DML rows.
-
-    def save_hot_set(self, max_terms: int = 4096) -> int:
-        """Write the current-generation cached terms (MRU tail, at
-        most max_terms) to hot_terms.json in the index dir, atomic
-        rename like every other state commit. Returns the count."""
-        import json
-
-        terms = [
-            t
-            for t, (g, _nb, rows) in self._postings_cache.items()
-            if rows is not None and g == self.generation
-        ][-max_terms:]
-        payload = {"generation": self.generation, "terms": terms}
-        tmp = self.path / "hot_terms.json.tmp"
-        tmp.write_text(json.dumps(payload))
-        tmp.replace(self.path / "hot_terms.json")
-        return len(terms)
-
-    def prewarm(self, terms: Optional[List[str]] = None,
-                max_terms: int = 4096) -> int:
-        """Fill the postings LRU and the per-term df cache for
-        ``terms`` (default: the persisted hot set) via postings_rows,
-        so a reloaded interactive handle serves its first
-        repeat query without the scan+decode pipeline. Returns the
-        number of terms warmed (0 when no hot set exists).
-
-        Fetches run in CHUNKS of 64 terms and stop once the cache is
-        effectively SATURATED: postings_rows evicts to stay under the
-        budget after every insert, so "full" shows as accounted bytes
-        approaching the budget — continuing past that point would
-        only churn out the terms just warmed (popitem from the LRU
-        head) while materializing more posting bytes on the driver.
-        The chunking also bounds the per-read transient (the
-        per-query est_work gate that protects postings_rows' normal
-        callers does not apply here). A typical interactive hot set
-        is a few dozen terms = one read. Returns the number of
-        current-generation term entries actually RESIDENT with rows
-        after warming — not the number requested."""
-        import json
-
-        if terms is None:
-            f = self.path / "hot_terms.json"
-            if not f.exists():
-                return 0
-            try:
-                terms = json.loads(f.read_text()).get("terms", [])
-            except (ValueError, OSError):
-                return 0
-        terms = list(terms)[:max_terms]
-        if not terms:
-            return 0
-        for i in range(0, len(terms), 64):
-            chunk = terms[i : i + 64]
-            rows_map = self.postings_rows(chunk)
-            for t in chunk:
-                # same quantity search_sharded's df collect computes:
-                # sum of live per-segment dfs, 0 for unknown terms
-                self._df_cache[t] = sum(
-                    int(r.df) for r in rows_map.get(t, [])
-                )
-            # saturation stop: eviction keeps used <= budget, so a
-            # nearly-full accounting means further chunks would evict
-            # what this call just warmed
-            if (
-                self._postings_cache_used
-                >= 0.9 * self.postings_cache_bytes
-            ):
-                break
-        gen = self.generation
-        return sum(
-            1
-            for (g, _nb, rows) in self._postings_cache.values()
-            if rows is not None and g == gen
-        )
-
 
 class _CachedShardRow:
     """Plain driver-side shard row; attribute layout matches what

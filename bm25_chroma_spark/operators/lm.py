@@ -166,22 +166,12 @@ def train_word_lm(
             )
         # the pruned model is broadcastable by contract — pin it as
         # Arrow-local relations (exact schemas; collect() rows, not
-        # toPandas, so nullable longs can never round through float64).
-        # The two derivation collects are independent jobs over the
-        # already-materialized cache — overlap them (guide §2.6)
-        from concurrent.futures import ThreadPoolExecutor
-
+        # toPandas, so nullable longs can never round through float64)
         spark = docs.sparkSession
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_uni = pool.submit(uni.collect)
-            f_big = pool.submit(big.collect)
-            uni_rows = [
-                (r["term"], int(r["count"])) for r in f_uni.result()
-            ]
-            big_rows = [
-                (r["w1"], r["w2"], int(r["count"]))
-                for r in f_big.result()
-            ]
+        uni_rows = [(r["term"], int(r["count"])) for r in uni.collect()]
+        big_rows = [
+            (r["w1"], r["w2"], int(r["count"])) for r in big.collect()
+        ]
     finally:
         full.unpersist()
     import pandas as pd

@@ -161,6 +161,21 @@ def _doc_id_expr(uid_col):
     return F.xxhash64(uid_col)
 
 
+def _rows_with_ids(df: DataFrame, column: str, ids: list, dtype: str
+                   ) -> DataFrame:
+    """The rows of ``df`` whose ``column`` is in ``ids``: an isin
+    filter, which pushes into the parquet scan, for up to
+    reader.MAX_POINT_IDS ids; above that a broadcast join of an ids
+    DataFrame (a 1k-query batched query() can carry 50k result uids),
+    never a giant literal expression tree."""
+    if len(ids) <= reader.MAX_POINT_IDS:
+        return df.filter(F.col(column).isin(ids))
+    ids_df = df.sparkSession.createDataFrame(
+        [(x,) for x in ids], f"{column} {dtype}"
+    )
+    return df.join(F.broadcast(ids_df), column)
+
+
 CORPUS_DDL = "doc_uid string, text string, meta_json string, deleted boolean"
 VECTORS_DDL = "doc_uid string, embedding array<double>"
 QUERY_DF_DDL = (
@@ -975,13 +990,6 @@ class SparkHybridRetriever:
             _gen_sig("vectors"),
         )
 
-    def _interactive_key_json(self):
-        """The interactive key as a JSON-stable structure (tuples ->
-        lists), for stamping persisted warm-state files. Python ints
-        keep full precision through json, so the ns mtimes survive."""
-        gen, corpus, vectors = self._interactive_key()
-        return [gen, [list(t) for t in corpus], [list(t) for t in vectors]]
-
     def _warm_caches(self) -> None:
         """Validate the warm caches against the current corpus state,
         clearing them all when the key moved (DML can never be served
@@ -991,6 +999,12 @@ class SparkHybridRetriever:
         no cache is cleared while a call is still iterating it."""
         key = self._interactive_key()
         if key != self._warm_key:
+            if self._index is not None:
+                # another handle may have written the state: re-read
+                # the index stats, so the BM25 leg scores the live
+                # generation (no Spark job on a clean index)
+                self._index.refresh()
+                key = self._interactive_key()
             self._warm_key = key
             self._vec_cache = None
             self._doc_cache.clear()
@@ -1062,9 +1076,7 @@ class SparkHybridRetriever:
         every live uid with a vector, keyed by the same id) with no
         read at all; only ids it lacks — BM25-only docs, or no cache
         loaded — are fetched with ONE filtered projection of the
-        corpus (isin pushes into the parquet scan for
-        interactive-sized lists; a broadcast-joined ids DataFrame
-        above that — never a giant literal expression tree)."""
+        corpus (_rows_with_ids)."""
         out: Dict[int, str] = {}
         missing: List[int] = []
         for d in doc_ids:
@@ -1081,17 +1093,10 @@ class SparkHybridRetriever:
                 found = self._vec_cache.uids_of(missing)
                 missing = [d for d in missing if d not in found]
             if missing:
-                if len(missing) <= reader.MAX_POINT_IDS:
-                    fetched = self._uid_map().filter(
-                        F.col("doc_id").isin([int(x) for x in missing])
-                    )
-                else:
-                    ids_df = self.spark.createDataFrame(
-                        [(int(x),) for x in missing], "doc_id long"
-                    )
-                    fetched = self._uid_map().join(
-                        F.broadcast(ids_df), "doc_id"
-                    )
+                fetched = _rows_with_ids(
+                    self._uid_map(), "doc_id",
+                    [int(x) for x in missing], "long",
+                )
                 found.update(
                     (r["doc_id"], r["doc_uid"]) for r in fetched.collect()
                 )
@@ -1133,21 +1138,9 @@ class SparkHybridRetriever:
                     self.state / "corpus", missing, self._reader_budget()
                 )
             if got is None:
-                # interactive-sized sets push isin into the parquet
-                # scan; above that a broadcast-joined ids DataFrame (a
-                # 1k-query batched query() can carry 50k result uids —
-                # a giant isin literal tree is the r4 anti-pattern)
-                if len(missing) <= reader.MAX_POINT_IDS:
-                    fetched = self.corpus_df().filter(
-                        F.col("doc_uid").isin(missing)
-                    )
-                else:
-                    ids_df = self.spark.createDataFrame(
-                        [(u,) for u in missing], "doc_uid string"
-                    )
-                    fetched = self.corpus_df().join(
-                        F.broadcast(ids_df), "doc_uid"
-                    )
+                fetched = _rows_with_ids(
+                    self.corpus_df(), "doc_uid", missing, "string"
+                )
                 got = {
                     r["doc_uid"]: (r["text"], r["meta_json"])
                     for r in fetched.collect()
@@ -1184,7 +1177,7 @@ class SparkHybridRetriever:
                 out[qid].append((uid_of[d], score))
         return out
 
-    def _ann_centroids(self, src: DataFrame, n_live: int) -> list:
+    def _ann_centroids(self, src: DataFrame) -> list:
         """Trained IVF coarse quantizer, cached per corpus state: the
         (generation, n_docs, vector-gen-count) key moves on every
         mutation, so DML invalidates the cache and queries between
@@ -1194,6 +1187,7 @@ class SparkHybridRetriever:
 
         from bm25_chroma_spark.operators.knn import ivf_train_centroids
 
+        n_live = self._index.n_docs if self._index is not None else 0
         key = (
             self._index.generation if self._index else -1,
             n_live,
@@ -1207,6 +1201,44 @@ class SparkHybridRetriever:
             )
             self._ann_state = (key, centroids)
         return self._ann_state[1]
+
+    def _ivf_route(self) -> bool:
+        """Whether the vector leg takes IVF ANN: the live doc count has
+        reached ``ann_threshold``."""
+        n_live = self._index.n_docs if self._index is not None else 0
+        return self.ann_threshold is not None and n_live >= self.ann_threshold
+
+    def _spark_knn(
+        self, qvecs, top_k: int, score_round: Optional[int]
+    ) -> Optional[DataFrame]:
+        """The vector leg on Spark, -> (query_id, vec_id, dist, sim,
+        rank), or None when there are no live vectors: IVF ANN from
+        ``ann_threshold`` live docs on (the at-scale path: probe ~
+        nprobe/n_cells of the corpus instead of a full scan), exact
+        knn_bruteforce below it. ``qvecs``: the query vectors in either
+        form operators.knn takes (a list numbered by position, or a
+        (query_id, qvec) DataFrame)."""
+        vecs = self.vectors_df()
+        if vecs.isEmpty():
+            return None
+        from bm25_chroma_spark.operators.knn import knn_bruteforce, knn_ivf
+
+        self.last_vector_engine = "spark"
+        src = vecs.withColumn("vec_id", self._id_expr(F.col("doc_uid")))
+        if self._ivf_route():
+            self.last_vector_route = "ivf"
+            centroids = self._ann_centroids(src)
+            return knn_ivf(
+                src, qvecs, k=top_k, id_col="vec_id", vec_col="embedding",
+                n_cells=len(centroids),
+                nprobe=self.ann_nprobe or max(2, len(centroids) // 4),
+                centroids=centroids, score_round=score_round,
+            )
+        self.last_vector_route = "exact"
+        return knn_bruteforce(
+            src, qvecs, k=top_k, id_col="vec_id", vec_col="embedding",
+            score_round=score_round,
+        )
 
     def _vector_lists(
         self, query_texts: List[str], top_k: int,
@@ -1224,11 +1256,7 @@ class SparkHybridRetriever:
         out: List[List[Tuple[str, float]]] = [[] for _ in query_texts]
         if not list((self.state / "vectors").glob("gen_*.parquet")):
             return out
-        n_live = self._index.n_docs if self._index is not None else 0
-        ivf_route = (
-            self.ann_threshold is not None and n_live >= self.ann_threshold
-        )
-        if not ivf_route:
+        if not self._ivf_route():
             cache = self._vector_cache()
             if cache is not None:
                 if not len(cache.uids):  # all vectors deleted
@@ -1239,39 +1267,9 @@ class SparkHybridRetriever:
                     cache.topk(q, top_k, score_round)
                     for q in self.embed(query_texts)
                 ]
-        vecs = self.vectors_df()
-        if vecs.isEmpty():
+        res = self._spark_knn(self.embed(query_texts), top_k, score_round)
+        if res is None:
             return out
-        from bm25_chroma_spark.operators.knn import knn_bruteforce, knn_ivf
-
-        self.last_vector_engine = "spark"
-        src = vecs.withColumn("vec_id", self._id_expr(F.col("doc_uid")))
-        qvecs = self.embed(query_texts)
-        if ivf_route:
-            self.last_vector_route = "ivf"
-            centroids = self._ann_centroids(src, n_live)
-            n_cells = len(centroids)
-            res = knn_ivf(
-                src,
-                qvecs,
-                k=top_k,
-                id_col="vec_id",
-                vec_col="embedding",
-                n_cells=n_cells,
-                nprobe=self.ann_nprobe or max(2, n_cells // 4),
-                centroids=centroids,
-                score_round=score_round,
-            )
-        else:
-            self.last_vector_route = "exact"
-            res = knn_bruteforce(
-                src,
-                qvecs,
-                k=top_k,
-                id_col="vec_id",
-                vec_col="embedding",
-                score_round=score_round,
-            )
         uid = self._uid_map().withColumnRenamed("doc_id", "vec_id")
         rows = F.broadcast(res).join(uid, "vec_id").select(
             "query_id", "doc_uid", "sim", "rank"
@@ -1344,20 +1342,11 @@ class SparkHybridRetriever:
                     if u in vcache.by_uid
                 }
             else:
-                if len(all_uids) <= reader.MAX_POINT_IDS:
-                    vfetched = self.vectors_df().filter(
-                        F.col("doc_uid").isin(all_uids)
-                    )
-                else:
-                    vids = self.spark.createDataFrame(
-                        [(u,) for u in all_uids], "doc_uid string"
-                    )
-                    vfetched = self.vectors_df().join(
-                        F.broadcast(vids), "doc_uid"
-                    )
                 vec_map = {
                     r["doc_uid"]: r["embedding"]
-                    for r in vfetched.collect()
+                    for r in _rows_with_ids(
+                        self.vectors_df(), "doc_uid", all_uids, "string"
+                    ).collect()
                 }
 
         all_ids, all_docs, all_metas, all_dists, all_embeds = (
@@ -1482,16 +1471,8 @@ class SparkHybridRetriever:
                 )
             )
 
-        vecs = self.vectors_df()
-        if qrows and not vecs.isEmpty():
-            from bm25_chroma_spark.operators.knn import (
-                knn_bruteforce,
-                knn_ivf,
-            )
-
-            src = vecs.withColumn(
-                "vec_id", self._id_expr(F.col("doc_uid"))
-            )
+        resv = None
+        if qrows:
             embs = self.embed([t for _, t in qrows])
             qvecs = self.spark.createDataFrame(
                 [
@@ -1500,27 +1481,8 @@ class SparkHybridRetriever:
                 ],
                 "query_id long, qvec array<double>",
             )
-            n_live = self._index.n_docs if self._index is not None else 0
-            if (
-                self.ann_threshold is not None
-                and n_live >= self.ann_threshold
-            ):
-                self.last_vector_route = "ivf"
-                centroids = self._ann_centroids(src, n_live)
-                resv = knn_ivf(
-                    src, qvecs, k=top_k, id_col="vec_id",
-                    vec_col="embedding", n_cells=len(centroids),
-                    nprobe=self.ann_nprobe or max(2, len(centroids) // 4),
-                    centroids=centroids,
-                    score_round=score_round,
-                )
-            else:
-                self.last_vector_route = "exact"
-                resv = knn_bruteforce(
-                    src, qvecs, k=top_k, id_col="vec_id",
-                    vec_col="embedding",
-                    score_round=score_round,
-                )
+            resv = self._spark_knn(qvecs, top_k, score_round)
+        if resv is not None:
             legs.append(
                 resv.select(
                     "query_id",
@@ -1633,173 +1595,21 @@ class SparkHybridRetriever:
         ), QUERY_DF_DDL)
         return df if rows else df.limit(0)
 
+    def prewarm(self) -> int:
+        """Opt-in warm-up for a reloaded handle: validate the warm
+        caches and load the live vector matrix (_load_vec_matrix: no
+        Spark job while the vectors' footers bound it within
+        ``vector_cache_max_floats``). The postings, df, doc and uid
+        caches fill on demand through the driver-side reader, as on
+        any fresh handle. Returns the number of live vectors loaded:
+        0 when there are none or the matrix is past the bound."""
+        self._warm_caches()
+        cache = self._vector_cache()
+        return len(cache.uids) if cache is not None else 0
+
     # ------------------------------------------------------------ #
     # stats                                                         #
     # ------------------------------------------------------------ #
-
-    def save_hot_set(
-        self, max_terms: int = 4096, max_uids: int = 10_000
-    ) -> int:
-        """Persist the interactive hot state so a retriever
-        reconstructed on a fresh driver can prewarm(): the postings
-        LRU's TERM set (names only — ShardedIndex.save_hot_set), the
-        uid LRU's (doc_id -> doc_uid) entries, and the vector-cache
-        ELIGIBILITY decision (fits/too-big + shape, stamped with the
-        interactive key and id-expr fingerprint — never the matrix
-        itself, which is live state). The uid pairs are
-        safe to serve directly after reload because they are
-        IMMUTABLE facts of the configured doc_id_expr (deterministic
-        and injective: a given id always names the same uid,
-        regardless of any DML in between) — unlike posting rows,
-        which are state and are therefore only ever re-FETCHED, never
-        persisted. Returns the number of hot terms saved."""
-        import json as _json
-
-        if self._index is None:
-            return 0
-        n = self._index.save_hot_set(max_terms=max_terms)
-        pairs = list(self._uid_cache.items())[-max_uids:]
-        tmp = self.state / "warm_uids.json.tmp"
-        tmp.write_text(
-            _json.dumps(
-                {
-                    "entries": [[int(k), v] for k, v in pairs],
-                    # (doc_id -> uid) pairs are immutable ONLY under
-                    # the doc_id_expr that produced them; stamp its
-                    # behavioral fingerprint so a handle reloaded
-                    # with a different expression skips them instead
-                    # of serving wrong uids (ADVICE r7)
-                    "id_expr_fp": self._id_expr_fingerprint(),
-                }
-            )
-        )
-        tmp.replace(self.state / "warm_uids.json")
-
-        # vector-leg warm state (VERDICT r7 #6): the matrix itself is
-        # live state and is never persisted — what persists is the
-        # ELIGIBILITY DECISION (fits / too-big, with shape), stamped
-        # with the exact interactive key it was made under, so
-        # prewarm() can either reload the matrix (_load_vec_matrix) or
-        # mark too-big with ZERO jobs. A key mismatch at prewarm time
-        # simply ignores the file — staleness semantics unchanged.
-        vc = self._vec_cache
-        vec_meta = None
-        if vc == "too-big":
-            vec_meta = {"too_big": True}
-        elif isinstance(vc, _VecCache):
-            vec_meta = {
-                "too_big": False,
-                "n": len(vc.uids),
-                "dim": int(vc.mat.shape[1]) if vc.mat.size else 0,
-            }
-        if vec_meta is not None:
-            vec_meta["key"] = self._interactive_key_json()
-            vec_meta["id_expr_fp"] = self._id_expr_fingerprint()
-            vtmp = self.state / "warm_vec.json.tmp"
-            vtmp.write_text(_json.dumps(vec_meta))
-            vtmp.replace(self.state / "warm_vec.json")
-        return n
-
-    # uid strings representative of both real id-expression families
-    # (hash exprs act on any string; cast exprs only on numeric) —
-    # mapping these through doc_id_expr yields a behavioral
-    # fingerprint that distinguishes expressions without having to
-    # serialize the callable itself
-    _ID_FP_PROBES = ("7", "12345678901", "f3a9c1d2b4e6")
-
-    def _id_expr_fingerprint(self) -> list:
-        cached = getattr(self, "_id_fp", None)
-        if cached is not None:
-            return cached
-        row = (
-            self.spark.range(1)
-            .select(
-                *[
-                    self._id_expr(F.lit(p)).cast("string").alias(f"p{i}")
-                    for i, p in enumerate(self._ID_FP_PROBES)
-                ]
-            )
-            .collect()[0]
-        )
-        self._id_fp = [
-            row[f"p{i}"] for i in range(len(self._ID_FP_PROBES))
-        ]
-        return self._id_fp
-
-    def prewarm(self, max_terms: int = 4096) -> int:
-        """Opt-in cold-start warm-up: refill the postings LRU + df
-        cache from the persisted hot set (postings_rows: the
-        driver-side reader below its bounds), and reload the persisted
-        uid pairs, so the first repeat interactive query on a reloaded
-        handle launches ZERO Spark jobs. Staleness semantics
-        unchanged: posting rows fetch from the live generation
-        overlay; uid pairs are immutable under the id expression (see
-        save_hot_set)."""
-        import json as _json
-
-        if self._index is None:
-            return 0
-        n = self._index.prewarm(max_terms=max_terms)
-        f = self.state / "warm_uids.json"
-        if f.exists():
-            try:
-                payload = _json.loads(f.read_text())
-                entries = payload.get("entries", [])
-                # pairs saved under a DIFFERENT doc_id_expr (or by a
-                # pre-r8 build that didn't stamp one) would silently
-                # map ids to the wrong uids — skip them; postings
-                # prewarm above is id-expr-independent and still
-                # counts (ADVICE r7)
-                if payload.get("id_expr_fp") != self._id_expr_fingerprint():
-                    entries = []
-            except (ValueError, OSError):
-                entries = []
-            if entries:
-                # validate the key FIRST: _warm_caches clears the
-                # LRUs whenever the corpus-state key moves, which on
-                # a fresh handle is always (key None) — fill after
-                self._warm_caches()
-                for k, v in entries[-self.uid_cache_max_entries:]:
-                    self._uid_cache[int(k)] = v
-                # result enrichment (texts/metas) is the remaining
-                # cold piece on a reloaded handle; texts are STATE so
-                # they are re-FETCHED live here (one bounded call,
-                # like the postings prewarm) — never persisted
-                self._texts_for_uids(
-                    list(self._uid_cache.values())[
-                        -self.doc_cache_max_entries:
-                    ]
-                )
-
-        # vector-leg warm-up (VERDICT r7 #6): the persisted
-        # eligibility decision is honored ONLY when its interactive
-        # key matches the live corpus state byte-for-byte AND the id
-        # expression fingerprint matches (vec_ids are minted through
-        # doc_id_expr). too-big -> marked with zero jobs; eligible ->
-        # the matrix reloads (_load_vec_matrix: no job while its
-        # footers fit the bound), so the first repeat HYBRID query on
-        # the reloaded handle launches none.
-        fv = self.state / "warm_vec.json"
-        if fv.exists():
-            try:
-                meta = _json.loads(fv.read_text())
-            except (ValueError, OSError):
-                meta = None
-            if (
-                meta is not None
-                and meta.get("key") == self._interactive_key_json()
-                and meta.get("id_expr_fp") == self._id_expr_fingerprint()
-            ):
-                self._warm_caches()
-                if meta.get("too_big"):
-                    self._vec_cache = "too-big"
-                elif meta.get("n", 0) == 0:
-                    self._vec_cache = _VecCache(
-                        [], np.zeros(0, np.int64), np.zeros((0, 0))
-                    )
-                elif self._vec_cache is None:
-                    self._vec_cache = self._load_vec_matrix()
-        return n
 
     def get_system_stats(self) -> Dict:
         corpus_n = self.corpus_df().count()

@@ -113,7 +113,8 @@ def test_driver_query_df_equals_distributed(spark, tmp_path, numeric,
     with cast(doc_uid as long) ids. ``ann``: an ann_threshold below
     the corpus size, so both regimes take the IVF route (knn_ivf fed a
     list of query vectors on the driver, a DataFrame with the caller's
-    ids in the distributed plan) over the same trained centroids."""
+    ids in the distributed plan) over the same trained centroids. The
+    distributed plan reports its vector leg's engine as "spark"."""
     rng = random.Random(hash((numeric, embed)) & 0xFFFF)
     r = _churned(spark, tmp_path / "s", rng, numeric=numeric, embed=embed)
     r.ann_threshold = ann
@@ -121,6 +122,8 @@ def test_driver_query_df_equals_distributed(spark, tmp_path, numeric,
     for score_round in (None, 6):
         small, big = _both_regimes(spark, r, qrows, 4, score_round)
         assert small == big, score_round
+        if embed:  # the distributed plan's kNN leg ran on Spark
+            assert r.last_vector_engine == "spark"
         if ann is not None:
             assert r.last_vector_route == "ivf"
         answered = {row[0] for row in small}

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import pytest
 
+from bm25_chroma_spark.index import reader
 from bm25_chroma_spark.plans.retriever import SparkHybridRetriever
 
 
@@ -136,9 +137,11 @@ def test_warm_cache_invalidated_by_reset_reingest(spark, tmp_path):
     assert vec and vec[0][0] in ("a", "b")
 
 
-def test_warm_query_includes_embeddings_from_cache(spark, tmp_path, jobs):
+def test_warm_query_includes_embeddings_from_cache(spark, tmp_path, jobs,
+                                                  monkeypatch):
     """query(include=['embeddings']) served from the vector cache must
-    return the same floats as the distributed fetch."""
+    return the same floats as the distributed fetch, whether its point
+    reads filter on the ids (isin) or broadcast-join them."""
     r = _mk(spark, tmp_path, n=25)
     q = ["alpha spark document"]
     cold = r.query(q, n_results=3, include=["documents", "embeddings"])
@@ -154,6 +157,13 @@ def test_warm_query_includes_embeddings_from_cache(spark, tmp_path, jobs):
         q, n_results=3, include=["documents", "embeddings"]
     )
     assert spark_side["embeddings"] == warm["embeddings"]
+
+    monkeypatch.setattr(reader, "MAX_POINT_IDS", 0)  # broadcast joins
+    r3 = SparkHybridRetriever(spark, str(r.state))
+    r3.vector_cache_max_floats = 0
+    assert r3.query(
+        q, n_results=3, include=["documents", "embeddings"]
+    ) == spark_side
 
 
 @pytest.mark.parametrize("batch", [1, 3])
@@ -275,122 +285,44 @@ def test_queries_df_binds_vector_column_by_name(spark):
 
 
 def test_prewarm_reloaded_handle_first_repeat_query(spark, tmp_path, jobs):
-    """VERDICT-r6 #4: a retriever reconstructed on a fresh driver
-    starts cold; after save_hot_set() + prewarm() the FIRST repeat
-    query runs the driver path (at most the bounded uid-enrichment
-    job — no scan+decode pipeline) with identical results."""
+    """A handle reloaded over a saved state: prewarm() launches no
+    Spark job and returns the live vector count (the matrix loads with
+    pyarrow). The first query() and hybrid_search() after it launch
+    none either, equal the source handle's results, and serve the
+    vector leg from the driver cache."""
     r = _mk(spark, tmp_path, n=60, name="prewarm")
-    q = "alpha spark document"
-    cold = r.search_bm25(q, top_k=5)
-    assert cold
-    assert r.save_hot_set() > 0
+    q = ["alpha spark document", "gamma number7"]
+    want = r.query(q, n_results=5)
+    want_h = r.hybrid_search(q[0], top_k=5)
+    assert want["ids"][0] and want_h
 
     r2 = SparkHybridRetriever(spark, str(tmp_path / "prewarm"))
-    warmed = r2.prewarm()
-    assert warmed > 0
     jobs.mark()
-    got = r2.search_bm25(q, top_k=5)
-    assert got == cold
-    assert jobs.since() == 0, (
-        "prewarmed first repeat query must launch no Spark job: "
-        "postings + df come from the hot set, uids from the "
-        "persisted immutable (id -> uid) pairs"
-    )
-
-
-def test_prewarm_stale_hot_set_never_serves_stale_rows(spark, tmp_path):
-    """The hot set is a hint, not state: prewarming from a file
-    saved BEFORE a DML must fetch live-generation rows (the deleted
-    doc cannot come back)."""
-    r = _mk(spark, tmp_path, n=40, name="prestale")
-    q = "alpha spark document"
-    before = r.search_bm25(q, top_k=5)
-    assert r.save_hot_set() > 0
-    victim = before[0][0]
-    r.remove_document(victim)
-
-    r2 = SparkHybridRetriever(spark, str(tmp_path / "prestale"))
-    assert r2.prewarm() > 0
-    got = r2.search_bm25(q, top_k=5)
-    assert victim not in [u for u, _ in got]
-    # fresh distributed computation agrees
-    r3 = SparkHybridRetriever(spark, str(tmp_path / "prestale"))
-    assert r3.search_bm25(q, top_k=5) == got
-
-
-def test_prewarm_without_hot_set_is_noop(spark, tmp_path):
-    r = _mk(spark, tmp_path, n=20, name="prenone")
-    r2 = SparkHybridRetriever(spark, str(tmp_path / "prenone"))
-    assert r2.prewarm() == 0
-
-
-def test_prewarm_uid_pairs_gated_by_id_expr_fingerprint(spark, tmp_path):
-    """(doc_id -> uid) pairs are immutable only under the id
-    expression that minted them: a handle reloaded with a DIFFERENT
-    doc_id_expr must skip the persisted pairs (they'd map ids to the
-    wrong uids — ADVICE r7), while the id-expr-independent postings
-    prewarm still counts. Same expression keeps serving them."""
-    from pyspark.sql import functions as F
-
-    r = _mk(spark, tmp_path, n=30, name="fpgate")
-    q = "alpha spark document"
-    assert r.search_bm25(q, top_k=5)
-    assert r.save_hot_set() > 0
-
-    same = SparkHybridRetriever(spark, str(tmp_path / "fpgate"))
-    assert same.prewarm() > 0
-    assert len(same._uid_cache) > 0
-
-    other = SparkHybridRetriever(
-        spark,
-        str(tmp_path / "fpgate"),
-        doc_id_expr=lambda c: F.abs(F.xxhash64(c)),
-    )
-    assert other.prewarm() > 0  # postings hot set is still valid
-    assert len(other._uid_cache) == 0, (
-        "uid pairs saved under another doc_id_expr must not load"
-    )
-
-
-def test_prewarm_vector_leg_reloaded_handle(spark, tmp_path, jobs):
-    """VERDICT-r7 #6: save_hot_set persists the vector-cache
-    eligibility decision; a reloaded handle's prewarm() reloads the
-    matrix (one toPandas job, inside prewarm), so its FIRST repeat
-    hybrid query launches ZERO Spark jobs with identical results."""
-    r = _mk(spark, tmp_path, n=50, name="vecwarm")
-    q = "alpha spark document"
-    cold = r.hybrid_search(q, top_k=5)
-    assert cold
-    assert r.save_hot_set() > 0
-
-    r2 = SparkHybridRetriever(spark, str(tmp_path / "vecwarm"))
-    assert r2.prewarm() > 0
-    jobs.mark()
-    got = r2.hybrid_search(q, top_k=5)
-    assert got == cold
-    assert jobs.since() == 0, (
-        "prewarmed first repeat hybrid query must launch no Spark "
-        "job: postings + uids from the hot set, the vector matrix "
-        "from the prewarm reload"
-    )
+    assert r2.prewarm() == 60
+    got = r2.query(q, n_results=5)
+    got_h = r2.hybrid_search(q[0], top_k=5)
+    assert jobs.since() == 0, "prewarm and the first queries are job-free"
+    assert got == want
+    assert got_h == want_h
     assert r2.last_vector_engine == "driver-cache"
 
 
-def test_prewarm_vector_decision_stale_after_dml(spark, tmp_path):
-    """The persisted vector decision is keyed to the exact corpus
-    state: any ingest/DML after save_hot_set() must make prewarm()
-    ignore it (cold correctness path, never stale vectors)."""
-    r = _mk(spark, tmp_path, n=30, name="vecstale")
-    q = "alpha spark document"
-    assert r.hybrid_search(q, top_k=5)
-    assert r.save_hot_set() > 0
+def test_prewarm_then_write_never_serves_stale_rows(spark, tmp_path):
+    """A prewarmed handle whose state a second handle then writes to
+    (an add and a remove): its next query() returns the live rows,
+    the same as a fresh handle's, and never the removed uid."""
+    r = _mk(spark, tmp_path, n=40, name="prestale")
+    q = ["alpha spark document"]
+    r2 = SparkHybridRetriever(spark, str(tmp_path / "prestale"))
+    assert r2.prewarm() == 40
+    victim = r2.query(q, n_results=5)["ids"][0][0]
     r.add_documents_batch(
-        ["alpha spark document brand new text"], ["docnew"], [{"k": 1}]
+        ["alpha spark document spark brand new"], ["docnew"], [{"k": -1}]
     )
+    r.remove_document(victim)
 
-    r2 = SparkHybridRetriever(spark, str(tmp_path / "vecstale"))
-    r2.prewarm()
-    assert r2._vec_cache is None  # decision rejected, stays cold
-    got = r2.hybrid_search(q, top_k=5)
-    r3 = SparkHybridRetriever(spark, str(tmp_path / "vecstale"))
-    assert r3.hybrid_search(q, top_k=5) == got
+    got = r2.query(q, n_results=5)
+    assert victim not in got["ids"][0]
+    assert "docnew" in got["ids"][0]
+    r3 = SparkHybridRetriever(spark, str(tmp_path / "prestale"))
+    assert r3.query(q, n_results=5) == got
