@@ -326,3 +326,111 @@ def test_prewarm_then_write_never_serves_stale_rows(spark, tmp_path):
     assert "docnew" in got["ids"][0]
     r3 = SparkHybridRetriever(spark, str(tmp_path / "prestale"))
     assert r3.query(q, n_results=5) == got
+
+
+def _plant_legacy_warm_files(r: SparkHybridRetriever, uid_of: dict) -> None:
+    """Write the warm-state files that older versions persisted
+    (hot_terms.json, warm_uids.json, warm_vec.json), as a state dir
+    carried over from such a version holds them. The current code
+    reads none of them."""
+    import json
+
+    (r.state / "index" / "hot_terms.json").write_text(json.dumps(
+        {"generation": 0, "terms": ["alpha", "spark", "document"]}
+    ))
+    (r.state / "warm_uids.json").write_text(json.dumps(
+        {"entries": [[int(k), v] for k, v in uid_of.items()],
+         "id_expr_fp": "0"}
+    ))
+    (r.state / "warm_vec.json").write_text(json.dumps(
+        {"too_big": True, "key": "[]", "id_expr_fp": "0"}
+    ))
+
+
+def test_prewarm_stale_hot_set_never_serves_stale_rows(spark, tmp_path):
+    """Warm-state files left from before a DML are never served:
+    prewarm() on a handle reloaded after the remove fetches the live
+    generation (the deleted doc cannot come back), and a fresh handle
+    agrees."""
+    r = _mk(spark, tmp_path, n=40, name="prestale_old")
+    q = "alpha spark document"
+    before = r.search_bm25(q, top_k=5)
+    victim = before[0][0]
+    # wrong pairs on purpose: every cached id points at the victim
+    _plant_legacy_warm_files(r, {k: victim for k in r._uid_cache})
+    r.remove_document(victim)
+
+    r2 = SparkHybridRetriever(spark, str(tmp_path / "prestale_old"))
+    assert r2.prewarm() == 39
+    got = r2.search_bm25(q, top_k=5)
+    assert got and victim not in [u for u, _ in got]
+    r3 = SparkHybridRetriever(spark, str(tmp_path / "prestale_old"))
+    assert r3.search_bm25(q, top_k=5) == got
+
+
+def test_prewarm_without_hot_set_is_noop(spark, tmp_path, jobs):
+    """With nothing to load, prewarm() is a no-op: a handle over a
+    state with no vectors returns 0, launches no Spark job and leaves
+    the vector cache empty; so does a handle whose every doc was
+    removed."""
+    r = SparkHybridRetriever(spark, str(tmp_path / "prenone"))
+    jobs.mark()
+    assert r.prewarm() == 0
+    assert jobs.since() == 0
+    assert r._vector_cache() is None or not r._vector_cache().uids
+
+    r = _mk(spark, tmp_path, n=5, name="preempty")
+    for i in range(5):
+        r.remove_document(f"doc{i}")
+    r2 = SparkHybridRetriever(spark, str(tmp_path / "preempty"))
+    jobs.mark()
+    assert r2.prewarm() == 0
+    assert jobs.since() == 0
+    assert r2.query(["alpha spark document"], n_results=3)["ids"] == [[]]
+
+
+def test_prewarm_vector_leg_reloaded_handle(spark, tmp_path, jobs):
+    """prewarm() loads the vector matrix on a reloaded handle, so its
+    FIRST hybrid query launches ZERO Spark jobs, serves the vector leg
+    from the driver cache and equals the source handle's result."""
+    r = _mk(spark, tmp_path, n=50, name="vecwarm")
+    q = "alpha spark document"
+    cold = r.hybrid_search(q, top_k=5)
+    assert cold
+
+    r2 = SparkHybridRetriever(spark, str(tmp_path / "vecwarm"))
+    assert r2.prewarm() == 50
+    jobs.mark()
+    got = r2.hybrid_search(q, top_k=5)
+    assert got == cold
+    assert jobs.since() == 0, (
+        "prewarmed first hybrid query must launch no Spark job: the "
+        "vector matrix comes from the prewarm load, postings and uids "
+        "from the driver-side reader"
+    )
+    assert r2.last_vector_engine == "driver-cache"
+
+
+def test_prewarm_vector_decision_stale_after_dml(spark, tmp_path):
+    """A vector-cache decision from before an ingest is never reused:
+    a left-over warm_vec.json saying 'too-big' is ignored, and a
+    handle prewarmed BEFORE another handle's add reloads the live
+    matrix on its next query (the new doc ranks, as on a fresh
+    handle)."""
+    r = _mk(spark, tmp_path, n=30, name="vecstale")
+    q = "alpha spark document"
+    assert r.hybrid_search(q, top_k=5)
+    _plant_legacy_warm_files(r, {})
+    r2 = SparkHybridRetriever(spark, str(tmp_path / "vecstale"))
+    assert r2.prewarm() == 30
+    r2.hybrid_search(q, top_k=5)
+
+    r.add_documents_batch(
+        ["alpha spark document brand new text"], ["docnew"], [{"k": 1}]
+    )
+    got = r2.hybrid_search(q, top_k=5)
+    assert len(r2._vector_cache().uids) == 31
+    assert r2.last_vector_engine == "driver-cache"
+    r3 = SparkHybridRetriever(spark, str(tmp_path / "vecstale"))
+    assert r3.hybrid_search(q, top_k=5) == got
+    assert r3.search_vector(q, top_k=31) == r2.search_vector(q, top_k=31)
